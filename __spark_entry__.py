@@ -1093,7 +1093,6 @@ def _pipeline_oracle_sql(path: str, final_select: str | None = None) -> str:
        obj_is_ref, dtype, conv_id, turn_idx
 FROM t_ded
 WHERE obj_is_ref OR pred NOT IN (SELECT pred FROM uidp)"""
-    slug = "regexp_replace(lower(trim(obj_name)), '[ _]+', '-', 'g')"
     anorm = "trim(regexp_replace(lower({x}), '[-_\\s]+', ' ', 'g'))"
 
     return f"""
@@ -1141,7 +1140,7 @@ m_urn AS (
 m_verb AS (
     SELECT conv_id, turn_idx, kind,
            CASE kind {' '.join(rank_arms)} END AS kind_rank, match_idx,
-           'urn:' || etype || ':' || {slug} AS urn,
+           'urn:' || etype || ':' || {rules.slug_sql("obj_name")} AS urn,
            etype AS entity_type, obj_name AS name, pred, anchor AS subj_urn,
            CASE WHEN kind IN ({med_list}) THEN 'MEDIUM' ELSE 'HIGH' END AS confidence
     FROM (
@@ -1185,7 +1184,7 @@ m_slack AS (
 m_tool AS (
     SELECT conv_id, turn_idx, 'tool_call' AS kind,
            {rules.KIND_RANK['tool_call']} AS kind_rank, 0 AS match_idx,
-           'urn:Tool:' || regexp_replace(lower(trim(tool)), '[ _]+', '-', 'g') AS urn,
+           'urn:Tool:' || {rules.slug_sql("tool")} AS urn,
            'Tool' AS entity_type, tool AS name,
            'usedTool' AS pred, CAST(NULL AS VARCHAR) AS subj_urn,
            'HIGH' AS confidence
@@ -1195,7 +1194,7 @@ m_struct AS (
     SELECT conv_id, turn_idx, 'struct' AS kind,
            {rules.KIND_RANK['struct']} AS kind_rank, 0 AS match_idx,
            'urn:' || etype || ':'
-               || regexp_replace(lower(trim(sname)), '[ _]+', '-', 'g') AS urn,
+               || {rules.slug_sql("sname")} AS urn,
            etype AS entity_type, sname AS name,
            'mentions' AS pred, CAST(NULL AS VARCHAR) AS subj_urn,
            'HIGH' AS confidence
@@ -1541,7 +1540,7 @@ rows_ AS (
     SELECT conv_id, turn_idx, cpos, anchor, pred,
            CASE kind {rank_arms} END AS kind_rank,
            'urn:' || etype || ':'
-               || regexp_replace(lower(trim(obj_name)), '[ _]+', '-', 'g') AS obj,
+               || {rules.slug_sql("obj_name")} AS obj,
            row_number() OVER (PARTITION BY conv_id, turn_idx, kind
                               ORDER BY cpos) - 1 AS match_idx
     FROM verbs

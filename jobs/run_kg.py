@@ -15,7 +15,8 @@ Cluster launch (the north-rule deployment shape):
 No ``master`` is set here: the cluster manager (YARN/K8s/standalone)
 provides it via spark-submit; local smoke runs pass ``--master local[8]``
 on the spark-submit command line.  The same job resumes idempotently: the
-out dir's _lineage table skips completed buckets (config-hash gated).
+out dir's per-stage resume manifests (``resume/<stage>.json``) skip
+completed stages and mention buckets (config-hash gated).
 """
 
 from __future__ import annotations
@@ -30,7 +31,7 @@ def main() -> None:
     ap.add_argument("--alias-dict", required=True, help="parquet path or table name")
     ap.add_argument("--out", required=True, help="output warehouse dir")
     ap.add_argument("--table", action="store_true", help="read inputs as catalog tables")
-    ap.add_argument("--n-buckets", type=int, default=256, help="lineage/resume granularity")
+    ap.add_argument("--n-buckets", type=int, default=256, help="resume granularity")
     ap.add_argument("--shuffle-partitions", type=int, default=None)
     args = ap.parse_args()
 

@@ -12,7 +12,7 @@ over tables of multi-turn conversation/agent transcripts
        -> connected-components canonicalization of coreferent entities
        -> validation (broken refs / orphans, anti/semi joins)
        -> partitioned graph_nodes / graph_edges materialization
-       -> per-partition lineage + metrics, idempotent resume.
+       -> per-stage resume manifests + metrics, idempotent resume.
 
 Architecture is Spark-first (DataFrame/Catalyst/AQE); nothing is a port of
 the reference's Python orchestration.  Semantics parity targets are cited

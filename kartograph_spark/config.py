@@ -17,7 +17,7 @@ from dataclasses import asdict, dataclass, field
 class PipelineConfig:
     #: number of conversation hash-buckets = resumable work units
     #: (the Spark analog of the reference's chunk list,
-    #: hybrid_chunker.py:37-149; a bucket is the lineage granularity)
+    #: hybrid_chunker.py:37-149; a bucket is the resume granularity)
     n_buckets: int = 32
     #: coreference-merge gate (reference default agent_similarity_threshold,
     #: config.py:98-103)
@@ -26,7 +26,7 @@ class PipelineConfig:
     #: (chunk-split analog, orchestrator.py:637-687): conversations are
     #: further split into (conv_id, turn_idx // salt_turns) Arrow groups.
     salt_turns: int = 1024
-    #: rule-set version — bump when extraction rules change so lineage
+    #: rule-set version — bump when extraction rules change so resume
     #: invalidates (config-hash semantics)
     #: v2: entity-subject attribution for verb mentions
     #: v3: MEDIUM indirect tier + usedTool emission + E3 struct detection

@@ -24,10 +24,13 @@ MINHASH_SALTS = ("a|", "b|", "c|", "d|")
 #: O(k^2) within-bucket pairs — the classic dedup skew killer at corpus
 #: scale (k = 10^6 -> 10^12 pairs).  Buckets larger than this emit STAR
 #: edges (bucket-min doc -> member) instead of all pairs: emission is
-#: linear in bucket size, no member is dropped (every doc in an
-#: oversized bucket still appears in >= 1 pair, so connected-components
-#: consumers see the same clusters), and the switch is deterministic so
-#: the DuckDB oracles mirror it bit-for-bit via the same window count.
+#: linear in bucket size, every doc in an oversized bucket still appears
+#: in >= 1 candidate pair, and the switch is deterministic so the DuckDB
+#: oracles mirror it bit-for-bit via the same window count.  Clusters
+#: survive the cap only where each star edge passes the pair filter
+#: (similarity threshold / band count): a member close to another member
+#: but NOT to the bucket-min doc loses that edge, which all-pairs
+#: emission would have kept.
 LSH_MAX_BUCKET = 64
 
 
@@ -231,9 +234,11 @@ def embedding_neardup(
     star-emission bucket cap as the MinHash path applies here on the
     (band, bucket) key: oversized buckets only emit pairs anchored at the
     bucket-min vector — emission is linear in bucket size, every member
-    still appears in >= 1 pair (connected-components consumers see the
-    same clusters), and the switch is a deterministic window count the
-    DuckDB oracle mirrors bit-for-bit.  ``persist_buckets`` has the same
+    still appears in >= 1 candidate pair, and the switch is a
+    deterministic window count the DuckDB oracle mirrors bit-for-bit.
+    Clusters survive the cap only when the bucket's members are within
+    the cosine threshold of the bucket-min vector: a member similar to
+    other members but not to the bucket-min loses its edges to them.  ``persist_buckets`` has the same
     trade as near_dup_pairs (the banded_buckets Arrow pass runs once
     instead of once per join side).
     """

@@ -1,120 +1,75 @@
-"""Per-partition lineage + idempotent resume (M6; operators S10/J8).
+"""Per-stage resume manifests + idempotent resume (M6; operators S10/J8).
 
 Reference semantics: checkpoint stores completed chunk ids and skips them
 on resume (/root/reference/extraction/kg_extractor/orchestrator.py:484-536,
 589-597; disk store checkpoint/disk_store.py:33-128), invalidated when the
 config hash changes (config.py:319-336).
 
-Spark rebuild: work unit = conversation hash-bucket
-``pmod(xxhash64(conv_id), n_buckets)``.  Completed buckets are recorded in
-a ``_lineage`` table ``(partition_id, stage, config_hash, rows, status,
-finished_at)``; resume anti-joins pending buckets against completed ones
-and re-runs only the rest.  Stage outputs are written with dynamic
-partition overwrite per bucket, so a re-run of a bucket is idempotent
-(the MERGE INTO analog without an Iceberg catalog).
+Spark rebuild: each stage keeps ONE manifest, ``resume/<stage>.json`` =
+``{"config_hash": ..., "rows": {bucket: rows}}``, the only resume record.
+It says which config's output fully occupies the stage's tables; global
+stages store no rows, the ``mentions`` stage lists its completed
+conversation hash-buckets ``pmod(xxhash64(conv_id), n_buckets)`` (the
+bucket count is part of the config hash).  Protocol: remove the manifest
+before the first table write that recomputes a stage, and write it (tmp
+file + ``os.replace``) only after the table commit — a kill at any point
+leaves "not done", never "done for the wrong config".  Manifests are read
+with stdlib ``json`` on the driver: resume bookkeeping launches no Spark
+job.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
-import time
-import uuid
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+RESUME_DIR = "resume"
 
 
-LINEAGE_DIR = "lineage"
-LINEAGE_SCHEMA = (
-    "partition_id int, stage string, config_hash string, rows long, "
-    "status string, finished_at double"
-)
+def _manifest_path(root: str, stage: str) -> str:
+    return os.path.join(root, RESUME_DIR, f"{stage}.json")
 
 
-def _lineage_path(root: str) -> str:
-    return os.path.join(root, LINEAGE_DIR)
+def read_stage_marker(root: str, stage: str) -> dict | None:
+    """The stage's manifest, or None when the stage is not done."""
+    try:
+        with open(_manifest_path(root, stage)) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return None
 
 
-def read_lineage(spark: SparkSession, root: str) -> DataFrame:
-    p = _lineage_path(root)
-    if not os.path.exists(p) or not any(
-        f.endswith(".parquet") for f in os.listdir(p)
-    ):
-        return spark.createDataFrame([], LINEAGE_SCHEMA)
-    return spark.read.parquet(p)
+def write_stage_marker(root: str, stage: str, manifest: dict | None) -> None:
+    """Atomically replace the stage's manifest; ``None`` removes it."""
+    p = _manifest_path(root, stage)
+    if manifest is None:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(p)
+        return
+    os.makedirs(os.path.dirname(p), exist_ok=True)
+    tmp = p + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(manifest, f)
+    os.replace(tmp, p)
 
 
-def completed_partitions(
-    spark: SparkSession, root: str, stage: str, config_hash: str
-) -> set[int]:
-    lin = read_lineage(spark, root)
-    rows = (
-        lin.filter(
-            (lin.stage == stage)
-            & (lin.config_hash == config_hash)
-            & (lin.status == "done")
-        )
-        .select("partition_id")
-        .distinct()
-        .collect()
-    )
-    return {r["partition_id"] for r in rows}
+def completed_partitions(root: str, stage: str, config_hash: str) -> set[int]:
+    """Buckets the manifest lists as done for this config."""
+    m = read_stage_marker(root, stage)
+    if m is None or m["config_hash"] != config_hash:
+        return set()
+    return {int(b) for b in m.get("rows", {})}
 
 
 def record_completed(
     root: str, stage: str, config_hash: str, bucket_rows: dict[int, int]
 ) -> None:
-    """Append lineage rows (driver-side; one tiny file per stage run)."""
-    if not bucket_rows:
-        return
-    p = _lineage_path(root)
-    os.makedirs(p, exist_ok=True)
-    now = time.time()
-    pdf = pd.DataFrame(
-        {
-            "partition_id": list(bucket_rows.keys()),
-            "stage": stage,
-            "config_hash": config_hash,
-            "rows": list(bucket_rows.values()),
-            "status": "done",
-            "finished_at": now,
-        }
-    )
-    pdf["partition_id"] = pdf["partition_id"].astype("int32")
-    pdf["rows"] = pdf["rows"].astype("int64")
-    pdf.to_parquet(os.path.join(p, f"lineage-{uuid.uuid4().hex}.parquet"), index=False)
-
-
-#: sibling of the lineage parquet dir (a non-parquet file inside it
-#: would break the spark.read.parquet of the lineage table)
-MARKER_DIR = "lineage_markers"
-
-
-def write_stage_marker(root: str, stage: str, config_hash: str) -> None:
-    """Record WHICH config's output currently occupies a stage's tables.
-
-    Lineage rows are append-only per config hash, but stage outputs are
-    last-writer-wins — after a config round-trip (run A, run B, run A)
-    the old config's lineage rows still exist while the tables hold the
-    other config's data.  The marker is overwritten on every stage
-    completion; resume requires marker == this config's hash, so a
-    mismatch forces recompute instead of serving another config's
-    tables."""
-    d = os.path.join(root, MARKER_DIR)
-    os.makedirs(d, exist_ok=True)
-    tmp = os.path.join(d, f"current_{stage}.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump({"stage": stage, "config_hash": config_hash}, f)
-    os.replace(tmp, os.path.join(d, f"current_{stage}.json"))
-
-
-def read_stage_marker(root: str, stage: str) -> str | None:
-    p = os.path.join(root, MARKER_DIR, f"current_{stage}.json")
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return json.load(f).get("config_hash")
+    """Merge newly committed buckets into this config's manifest."""
+    m = read_stage_marker(root, stage)
+    rows = m.get("rows", {}) if m and m["config_hash"] == config_hash else {}
+    rows.update({str(b): int(n) for b, n in bucket_rows.items()})
+    write_stage_marker(root, stage, {"config_hash": config_hash, "rows": rows})
 
 
 def write_metrics(root: str, metrics: dict) -> str:

@@ -2,7 +2,7 @@
 
 Stages:
   1. mentions   — scan transcripts -> vectorized extraction (map-only,
-                  resumable per conversation hash-bucket via _lineage)
+                  resumable per conversation hash-bucket)
   2. canonical  — entity linking pairs + type normalization + connected
                   components -> broadcast rewrite
   3. triples    — edge/node/conversation triple emission -> first-
@@ -10,6 +10,11 @@ Stages:
   4. validate   — broken-ref exclusion (anti join), orphans, record rules
   5. materialize— graph_nodes / graph_edges / triples tables + schema
                   manifest + metrics
+
+Resume: each stage's one record is its ``resume/<stage>.json`` manifest
+(lineage.py) — removed before the stage's first table write, written
+after its table commit, so a stage is skipped only when its tables were
+last fully written by this config.
 
 Shuffle budget (design-for-100TB): the extraction stage is shuffle-free;
 canonicalization shuffles only entity-vocabulary-sized frames; the one
@@ -89,25 +94,22 @@ def run_mentions_stage(
     store: TableStore,
     cfg: PipelineConfig,
 ) -> DataFrame:
-    """Resumable extraction stage: skip buckets already done for this
-    config hash (J8 anti-join semantics, orchestrator.py:589-597).
+    """Resumable extraction stage: skip buckets the manifest lists as
+    done for this config hash (J8 semantics, orchestrator.py:589-597).
 
-    Stale-table guard: when the out dir's mentions table was last
-    written by a DIFFERENT config (lineage marker mismatch), every
-    bucket re-runs and the write is a FULL overwrite — the old config
-    may have used a different bucket count, so dynamic per-bucket
-    overwrite could leave its extra partitions in the table.
+    Only a manifest of THIS config vouches for the table's other
+    buckets, so only then is the write a dynamic per-bucket overwrite
+    (the manifest stays: the write touches no bucket it lists).  Without
+    one — missing, or another config's, whose bucket count may differ —
+    the manifest is removed and every bucket re-runs as a FULL overwrite,
+    so no stale partition survives.
     """
-    marker = read_stage_marker(store.root, "mentions")
-    stale = marker is not None and marker != cfg.config_hash
-    done = (
-        set()
-        if stale
-        else completed_partitions(spark, store.root, "mentions", cfg.config_hash)
-    )
+    done = completed_partitions(store.root, "mentions", cfg.config_hash)
     pending = [b for b in range(cfg.n_buckets) if b not in done]
 
     if pending:
+        if not done:
+            write_stage_marker(store.root, "mentions", None)
         sub = transcripts.withColumn("bucket", bucket_col(cfg.n_buckets))
         if done:
             sub = sub.filter(F.col("bucket").isin(pending))
@@ -119,7 +121,7 @@ def run_mentions_stage(
         mentions = extract_mentions(sub).withColumn(
             "bucket", bucket_col(cfg.n_buckets)
         )
-        # Per-bucket lineage counts ride the write job as observed metrics
+        # Per-bucket manifest rows ride the write job as observed metrics
         # (count(CASE bucket) per pending bucket) instead of re-reading and
         # re-aggregating the table afterwards — one job, not two; zero
         # counts for mention-less buckets fall out of count(NULL) = 0.
@@ -132,13 +134,12 @@ def run_mentions_stage(
             ],
         )
         w = mentions.write.mode("overwrite")
-        if not stale:
+        if done:
             w = w.option("partitionOverwriteMode", "dynamic")
         w.partitionBy("bucket").parquet(store.path("mentions"))
         got = obs.get
         counts = {b: int(got[f"b{b}"]) for b in pending}
         record_completed(store.root, "mentions", cfg.config_hash, counts)
-        write_stage_marker(store.root, "mentions", cfg.config_hash)
     return spark.read.parquet(store.path("mentions")).drop("bucket")
 
 
@@ -150,8 +151,8 @@ def build_triples(
     mentions: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Pure transformation composition (no store): returns (kept_triples,
-    broken_ref_report).  Used by run_pipeline and by in-memory callers
-    (__spark_entry__, bench)."""
+    broken_ref_report).  Used by in-memory callers (__spark_entry__,
+    bench); run_pipeline shares its triples_chain."""
     cfg = cfg or PipelineConfig()
     if mentions is None:
         # persist: the mention frame feeds type-norm, pair generation and
@@ -166,6 +167,16 @@ def build_triples(
     canonical, _cmap = canonicalize_mentions(
         mentions, alias_dict, cfg.confidence_threshold
     )
+    return triples_chain(canonical, transcripts)
+
+
+def triples_chain(
+    canonical: DataFrame, transcripts: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """Canonical mentions -> (kept_triples, broken_ref_report): emission,
+    first-occurrence dedup, uid>scalar resolution, encode, broken-ref
+    split.  The one copy of the chain, shared by build_triples and the
+    run_pipeline triples stage."""
     raw = tr.mention_triples(canonical).unionByName(
         tr.conversation_triples(transcripts)
     )
@@ -182,34 +193,23 @@ def build_triples(
     resolved = tr.apply_uid_resolution(
         deduped, tr.collect_uid_predicates(deduped)
     )
-    encoded = tr.encode_final(resolved)
-    return val.split_broken_refs(encoded)
+    return val.split_broken_refs(tr.encode_final(resolved))
 
 
-#: whole-stage lineage sentinel: the global stages (canonical / triples /
-#: materialize) are all-or-nothing — canonicalization and the first-
-#: occurrence dedup are corpus-global aggregations, so there is no
-#: per-bucket unit to resume below the stage (the reference's resume has
-#: the same shape: per-chunk for extraction, whole-artifact for the
-#: restored entity store, orchestrator.py:484-536).
-STAGE_SENTINEL = -1
-
-
-def _stage_done(spark: SparkSession, root: str, stage: str, cfg) -> bool:
-    """Done = a lineage row for this config AND the stage's tables were
-    last written by this config (marker) — the lineage rows alone would
-    serve another config's overwritten tables after a config
-    round-trip."""
-    if read_stage_marker(root, stage) != cfg.config_hash:
-        return False
-    return STAGE_SENTINEL in completed_partitions(
-        spark, root, stage, cfg.config_hash
-    )
-
-
-def _mark_stage(root: str, stage: str, cfg, rows: int) -> None:
-    record_completed(root, stage, cfg.config_hash, {STAGE_SENTINEL: rows})
-    write_stage_marker(root, stage, cfg.config_hash)
+def run_stage(root: str, stage: str, cfg: PipelineConfig, build) -> None:
+    """Whole-stage resume for the global stages (canonical / triples /
+    materialize): canonicalization and the first-occurrence dedup are
+    corpus-global aggregations, so there is no per-bucket unit below the
+    stage (the reference's resume has the same shape: per-chunk for
+    extraction, whole-artifact for the restored entity store,
+    orchestrator.py:484-536).  ``build()`` writes the stage's tables;
+    it runs unless this config's manifest says they are current."""
+    manifest = read_stage_marker(root, stage)
+    if manifest is not None and manifest["config_hash"] == cfg.config_hash:
+        return
+    write_stage_marker(root, stage, None)
+    build()
+    write_stage_marker(root, stage, {"config_hash": cfg.config_hash})
 
 
 def run_pipeline(
@@ -223,12 +223,12 @@ def run_pipeline(
 
     Resume covers EVERY stage (J8/S10, orchestrator.py:484-536,589-597):
     mentions per conversation-bucket (run_mentions_stage), then one
-    lineage row per global stage — ``canonical`` (canonicalized mentions
-    + canonical map tables), ``triples`` (kept triples + broken-ref
-    report), ``materialize`` (graph/validation/report artifacts).  A
-    re-run after a mid-stage kill skips each stage whose lineage row is
-    present for this config hash and reads its stored output instead of
-    recomputing; outputs are overwrite-idempotent either way.
+    whole-stage manifest per global stage (run_stage) — ``canonical``
+    (canonicalized mentions + canonical map tables), ``triples`` (kept
+    triples + broken-ref report), ``materialize`` (graph/validation/
+    report artifacts).  A re-run after a kill skips each stage whose
+    manifest names this config hash and reads its stored output instead
+    of recomputing; outputs are overwrite-idempotent either way.
     """
     cfg = cfg or PipelineConfig()
     store = TableStore(spark, out_dir)
@@ -236,42 +236,27 @@ def run_pipeline(
 
     mentions = run_mentions_stage(spark, transcripts, store, cfg)
 
-    if _stage_done(spark, store.root, "canonical", cfg):
-        canonical = store.read("canonical_mentions")
-        cmap = store.read("canonical_map")
-    else:
+    def canonical_stage():
         canonical, cmap = canonicalize_mentions(
             mentions, alias_dict, cfg.confidence_threshold
         )
         store.write(canonical, "canonical_mentions")
         store.write(cmap, "canonical_map")
-        canonical = store.read("canonical_mentions")
-        cmap = store.read("canonical_map")
-        _mark_stage(store.root, "canonical", cfg, canonical.count())
 
-    if _stage_done(spark, store.root, "triples", cfg):
-        kept = store.read("triples")
-        broken = store.read("broken_refs")
-    else:
-        raw = tr.mention_triples(canonical).unionByName(
-            tr.conversation_triples(transcripts)
-        )
-        # persist + eager materialization mirrors build_triples: the uid-
-        # predicate collect doubles as the cache fill so the broken-ref
-        # split never recomputes the dedup-shuffle chain.
-        deduped = tr.dedup_first_occurrence(raw).persist()
-        resolved = tr.apply_uid_resolution(
-            deduped, tr.collect_uid_predicates(deduped)
-        )
-        encoded = tr.encode_final(resolved)
-        kept, broken = val.split_broken_refs(encoded)
+    run_stage(store.root, "canonical", cfg, canonical_stage)
+    canonical = store.read("canonical_mentions")
+    cmap = store.read("canonical_map")
+
+    def triples_stage():
+        kept, broken = triples_chain(canonical, transcripts)
         store.write(kept, "triples", partition_by=["pred"])
         store.write(broken, "broken_refs")
-        kept = store.read("triples")
-        broken = store.read("broken_refs")
-        _mark_stage(store.root, "triples", cfg, kept.count())
 
-    if not _stage_done(spark, store.root, "materialize", cfg):
+    run_stage(store.root, "triples", cfg, triples_stage)
+    kept = store.read("triples")
+    broken = store.read("broken_refs")
+
+    def materialize_stage():
         orphans = val.find_orphans(kept)
         rec_errors = val.record_errors(canonical)
         errors = broken.unionByName(orphans).unionByName(rec_errors)
@@ -285,23 +270,21 @@ def run_pipeline(
         write_schema_artifacts(
             manifest, infer_type_predicates(kept), out_dir
         )
-        _mark_stage(
-            store.root, "materialize", cfg, store.read("graph_edges").count()
-        )
 
-    triples_out = store.read("triples")
+    run_stage(store.root, "materialize", cfg, materialize_stage)
+
     errors = store.read("validation_errors")
     dur = time.time() - t0
-    n_triples = triples_out.count()
+    n_triples = kept.count()
     metrics = {
         "turns": transcripts.count(),
         "conversations": transcripts.select("conv_id").distinct().count(),
         "mentions": mentions.count(),
         "merged_entities": cmap.count(),
-        "entities": val.node_urns(triples_out).count(),
+        "entities": val.node_urns(kept).count(),
         "edges": store.read("graph_edges").count(),
         "triples": n_triples,
-        "broken_refs": store.read("broken_refs").count(),
+        "broken_refs": broken.count(),
         "orphans": errors.filter(F.col("message").startswith("orphan")).count(),
         "review_flags": store.read("review_flags").count(),
         "low_confidence_logged": store.read("low_confidence_log").count(),

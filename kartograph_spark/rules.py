@@ -345,6 +345,21 @@ def slugify(name: pd.Series) -> pd.Series:
     )
 
 
+#: RE2 class of every character ``str.isspace`` accepts — what Python's
+#: ``strip()`` and ``\s`` treat as whitespace (RE2's own ``\s`` lacks \v,
+#: \x1c-\x1f and the non-ASCII spaces)
+_WS_RE2 = (
+    r"\t-\r\x{1c}-\x{20}\x{85}\x{a0}\x{1680}\x{2000}-\x{200a}"
+    r"\x{2028}\x{2029}\x{202f}\x{205f}\x{3000}"
+)
+
+
+def slug_sql(expr: str) -> str:
+    """DuckDB twin of ``slugify`` for the SQL oracles."""
+    stripped = f"regexp_replace({expr}, '^[{_WS_RE2}]+|[{_WS_RE2}]+$', '', 'g')"
+    return f"regexp_replace(lower({stripped}), '[{_WS_RE2}_]+', '-', 'g')"
+
+
 def alias_norm(name: pd.Series) -> pd.Series:
     """Blocking key for entity linking: lower, [-_]+ and whitespace -> single
     space, trimmed.  The alias dictionary stores the same normalization."""

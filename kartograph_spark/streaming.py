@@ -9,7 +9,7 @@ operators are the Spark-native incremental path over the same semantics:
   ``Trigger.AvailableNow`` + the file-source checkpoint give exactly the
   reference's resume contract (process everything new, skip everything
   already done, idempotent across restarts) — the file-source ledger plays
-  the role of the batch pipeline's _lineage table (J8 anti-join).  On an
+  the role of the batch pipeline's resume manifests (J8).  On an
   Iceberg deployment the same code runs over incremental snapshots.
 - ``stream_mention_counts``: event-time tumbling-window mention counts
   with a watermark for late turns — the streaming analog of the A4/A5
@@ -57,7 +57,7 @@ def stream_mentions(
 
     Returns the started query (AvailableNow: drains everything new, then
     stops).  Re-running with the same checkpoint skips processed files —
-    the streaming resume path (vs the batch _lineage anti-join).
+    the streaming resume path (vs the batch resume manifests).
     """
     mentions = extract_mentions(read_transcript_stream(spark, input_path))
     return (

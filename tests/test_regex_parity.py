@@ -82,3 +82,29 @@ def _check_all(con, parts):
 
 def test_regex_parity_property(con):
     _check_all(con)
+
+
+SLUG_NAMES = [
+    "Core Infra",
+    "\tCore\tInfra\n",
+    "\nline\nbreak\r\n",
+    " mixed \t_ runs__of\n\nspace ",
+    "vt\x0bff\x0cfs\x1cend\x1f",
+    "\xa0nbsp　ideographic ",
+    "_lead_and_trail_",
+    "\t\n",
+    "",
+]
+
+
+def test_slug_sql_matches_slugify(con):
+    """The oracle's slug template equals rules.slugify, whitespace other
+    than ' ' included (tabs/newlines inside a name and at its ends)."""
+    import pandas as pd
+
+    want = rules.slugify(pd.Series(SLUG_NAMES)).tolist()
+    got = [
+        con.execute(f"SELECT {rules.slug_sql('?')}", [n]).fetchone()[0]
+        for n in SLUG_NAMES
+    ]
+    assert got == want

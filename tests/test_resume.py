@@ -1,22 +1,29 @@
-"""Checkpoint/lineage resume (FIXTURES F4 resume case): kill mid-stage,
-re-run, identical output; completed partitions skipped via lineage
-anti-join (orchestrator.py:484-536, 589-597 semantics)."""
+"""Checkpoint resume (FIXTURES F4 resume case): kill mid-stage, re-run,
+identical output; completed partitions skipped via the per-stage resume
+manifests (orchestrator.py:484-536, 589-597 semantics).  Which work re-ran
+is read off the table files: Spark names every written part file
+uniquely, so a table (or bucket partition) that was not rewritten keeps
+its exact file set."""
 
 import glob
 import os
+import shutil
 import tempfile
 
 import pandas as pd
+import pytest
 
+from kartograph_spark import pipeline
 from kartograph_spark.config import PipelineConfig
 from kartograph_spark.graph import TableStore
 from kartograph_spark.lineage import (
-    LINEAGE_DIR,
     completed_partitions,
-    read_lineage,
-    record_completed,
+    read_stage_marker,
+    write_stage_marker,
 )
-from kartograph_spark.pipeline import run_mentions_stage
+from kartograph_spark.pipeline import run_mentions_stage, run_pipeline
+
+STAGES = ("mentions", "canonical", "triples", "materialize")
 
 
 def _mentions_pdf(spark, out):
@@ -29,6 +36,77 @@ def _mentions_pdf(spark, out):
     )
 
 
+def _triples_pdf(spark, out):
+    return (
+        spark.read.parquet(f"{out}/triples")
+        .toPandas()
+        .sort_values(["subj", "pred", "obj"])
+        .reset_index(drop=True)
+        .astype({"turn_idx": "int64"})
+    )
+
+
+def _files(out, table):
+    """Relative paths of a table's parquet part files."""
+    d = os.path.join(out, table)
+    return {
+        os.path.relpath(p, d)
+        for p in glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True)
+    }
+
+
+def _bucket_files(out):
+    by_bucket: dict[int, set[str]] = {}
+    for f in _files(out, "mentions"):
+        part, name = f.split(os.sep, 1)
+        by_bucket.setdefault(int(part.removeprefix("bucket=")), set()).add(name)
+    return by_bucket
+
+
+def _tables(out):
+    return sorted(
+        d
+        for d in os.listdir(out)
+        if glob.glob(os.path.join(out, d, "**", "*.parquet"), recursive=True)
+    )
+
+
+def _tiny_corpus(spark, texts):
+    """Six two-turn conversations repeating ``texts``."""
+    return spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "conv_id": [f"c{i}" for i in range(6) for _ in (0, 1)],
+                "turn_idx": pd.array([0, 1] * 6, dtype="int32"),
+                "role": ["user", "assistant"] * 6,
+                "text": list(texts) * 6,
+                "tool": [None, "query_dgraph"] * 6,
+                "ts": pd.to_datetime(["2026-01-01 00:00"] * 12).astype(
+                    "datetime64[us]"
+                ),
+            }
+        )
+    )
+
+
+TEXTS_A = (
+    "Service <urn:Application:pay> uses Prometheus.",
+    "It is running on AWS and calls Vault.",
+)
+TEXTS_B = (
+    "Service <urn:Application:billing> uses Grafana.",
+    "It is running on GCP and calls Kafka.",
+)
+
+
+def _empty_alias(spark):
+    return spark.createDataFrame(
+        [],
+        "alias_norm string, canonical_urn string, entity_type string,"
+        " canonical_name string",
+    )
+
+
 def test_resume_skips_completed_and_is_idempotent(spark, transcripts_df):
     cfg = PipelineConfig(n_buckets=8)
     out = tempfile.mkdtemp(prefix="kg-resume-")
@@ -36,34 +114,31 @@ def test_resume_skips_completed_and_is_idempotent(spark, transcripts_df):
 
     run_mentions_stage(spark, transcripts_df, store, cfg)
     baseline = _mentions_pdf(spark, out)
-    lin1 = read_lineage(spark, out).toPandas()
-    assert set(lin1["partition_id"]) == set(range(8))
+    manifest = read_stage_marker(out, "mentions")
+    assert manifest["config_hash"] == cfg.config_hash
+    assert {int(b) for b in manifest["rows"]} == set(range(8))
+    assert sum(manifest["rows"].values()) == len(baseline)
+    files1 = _bucket_files(out)
 
-    # simulate a mid-stage kill: forget completion of 3 buckets
+    # simulate a mid-stage kill: the manifest has not recorded 3 buckets
     lost = {1, 4, 6}
-    survivors = lin1[~lin1["partition_id"].isin(lost)]
-    for f in glob.glob(os.path.join(out, LINEAGE_DIR, "*.parquet")):
-        os.remove(f)
-    record_completed(
-        out,
-        "mentions",
-        cfg.config_hash,
-        dict(zip(survivors["partition_id"], survivors["rows"])),
+    assert lost <= set(files1)
+    survivors = {b: n for b, n in manifest["rows"].items() if int(b) not in lost}
+    write_stage_marker(
+        out, "mentions", {"config_hash": cfg.config_hash, "rows": survivors}
     )
-    assert completed_partitions(spark, out, "mentions", cfg.config_hash) == (
+    assert completed_partitions(out, "mentions", cfg.config_hash) == (
         set(range(8)) - lost
     )
-    lin_mid = read_lineage(spark, out).toPandas()
 
     # resume: only the lost buckets re-run; final output identical
     run_mentions_stage(spark, transcripts_df, store, cfg)
     resumed = _mentions_pdf(spark, out)
     pd.testing.assert_frame_equal(baseline, resumed)
-    lin2 = read_lineage(spark, out).toPandas()
-    redone = set(
-        lin2[lin2["finished_at"] > lin_mid["finished_at"].max()]["partition_id"]
-    )
-    assert redone == lost
+    files2 = _bucket_files(out)
+    assert set(files2) == set(files1)
+    assert {b for b in files1 if files1[b] != files2[b]} == lost
+    assert read_stage_marker(out, "mentions") == manifest
 
 
 def test_config_hash_invalidation(spark, transcripts_df):
@@ -74,147 +149,136 @@ def test_config_hash_invalidation(spark, transcripts_df):
     store = TableStore(spark, out)
     run_mentions_stage(spark, transcripts_df, store, cfg_a)
     # a different config hash sees zero completed partitions
-    assert completed_partitions(spark, out, "mentions", cfg_b.config_hash) == set()
-    assert completed_partitions(spark, out, "mentions", cfg_a.config_hash) == set(
+    assert completed_partitions(out, "mentions", cfg_b.config_hash) == set()
+    assert completed_partitions(out, "mentions", cfg_a.config_hash) == set(
         range(8)
     )
 
 
 def test_full_pipeline_resume_mid_triples(spark, transcripts_df, alias_df):
-    """Kill after the canonical stage (triples/materialize lineage rows
-    lost, outputs wiped): the re-run skips mentions AND canonical — no
-    new lineage rows, no extraction re-run — recomputes only the lost
+    """Kill after the canonical stage (triples/materialize manifests
+    lost, outputs wiped): the re-run leaves the mentions and canonical
+    tables untouched — no extraction re-run — recomputes only the lost
     stages, and converges to the identical triple set."""
-    import shutil
-    import tempfile
-
-    from kartograph_spark.pipeline import run_pipeline
-
     cfg = PipelineConfig(n_buckets=8)
     out = tempfile.mkdtemp(prefix="kg-full-resume-")
     m1 = run_pipeline(spark, transcripts_df, alias_df, out, cfg)
-    baseline = (
-        spark.read.parquet(f"{out}/triples")
-        .toPandas()
-        .sort_values(["subj", "pred", "obj"])
-        .reset_index(drop=True)
-    )
-    lin1 = read_lineage(spark, out).toPandas()
-    assert {"mentions", "canonical", "triples", "materialize"} <= set(lin1["stage"])
+    baseline = _triples_pdf(spark, out)
+    for stage in STAGES:
+        assert read_stage_marker(out, stage)["config_hash"] == cfg.config_hash
 
-    # simulate the kill: drop the triples+materialize lineage rows and
-    # their outputs; mentions + canonical survive
-    survivors = lin1[~lin1["stage"].isin(["triples", "materialize"])]
-    for f in glob.glob(os.path.join(out, LINEAGE_DIR, "*.parquet")):
-        os.remove(f)
-    for _, r in survivors.iterrows():
-        record_completed(
-            out, r["stage"], r["config_hash"], {int(r["partition_id"]): int(r["rows"])}
-        )
+    # simulate the kill: drop the triples+materialize manifests and their
+    # outputs; mentions + canonical survive
+    for stage in ("triples", "materialize"):
+        write_stage_marker(out, stage, None)
     for t in ("triples", "broken_refs", "graph_nodes", "graph_edges"):
         shutil.rmtree(os.path.join(out, t), ignore_errors=True)
-    lin_mid = read_lineage(spark, out).toPandas()
+    kept_tables = ("mentions", "canonical_mentions", "canonical_map")
+    before = {t: _files(out, t) for t in kept_tables}
 
     m2 = run_pipeline(spark, transcripts_df, alias_df, out, cfg)
-    resumed = (
-        spark.read.parquet(f"{out}/triples")
-        .toPandas()
-        .sort_values(["subj", "pred", "obj"])
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(
-        baseline.astype({"turn_idx": "int64"}), resumed.astype({"turn_idx": "int64"})
-    )
-    # the completed stages were NOT re-run: no lineage rows newer than
-    # the kill for mentions/canonical; triples/materialize re-recorded
-    lin2 = read_lineage(spark, out).toPandas()
-    new_rows = lin2[lin2["finished_at"] > lin_mid["finished_at"].max()]
-    assert set(new_rows["stage"]) == {"triples", "materialize"}
+    pd.testing.assert_frame_equal(baseline, _triples_pdf(spark, out))
+    # the completed stages were NOT re-run; the lost ones were re-recorded
+    assert {t: _files(out, t) for t in kept_tables} == before
+    for stage in ("triples", "materialize"):
+        assert read_stage_marker(out, stage)["config_hash"] == cfg.config_hash
     assert m2["triples"] == m1["triples"]
     assert m2["review_flags"] == m1["review_flags"]
 
 
 def test_full_pipeline_rerun_skips_everything(spark, transcripts_df, alias_df):
-    """A clean re-run against a completed out dir recomputes no stage —
-    only the metrics rollup — and reports identical counts."""
-    import tempfile
-
-    from kartograph_spark.pipeline import run_pipeline
-
+    """A clean re-run against a completed out dir writes no table and no
+    manifest — only the metrics rollup — and reports identical counts."""
     cfg = PipelineConfig(n_buckets=8)
     out = tempfile.mkdtemp(prefix="kg-rerun-")
     m1 = run_pipeline(spark, transcripts_df, alias_df, out, cfg)
-    lin1 = read_lineage(spark, out).toPandas()
+    tables = _tables(out)
+    files1 = {t: _files(out, t) for t in tables}
+    manifests1 = {s: read_stage_marker(out, s) for s in STAGES}
     m2 = run_pipeline(spark, transcripts_df, alias_df, out, cfg)
-    lin2 = read_lineage(spark, out).toPandas()
-    assert len(lin1) == len(lin2)  # zero new lineage rows
+    assert _tables(out) == tables
+    assert {t: _files(out, t) for t in tables} == files1
+    assert {s: read_stage_marker(out, s) for s in STAGES} == manifests1
+    assert not os.path.exists(os.path.join(out, "lineage"))
     for k in ("triples", "entities", "edges", "mentions", "review_flags"):
         assert m1[k] == m2[k], k
 
 
 def test_config_round_trip_recomputes(spark):
     """run A, run B, run A again against ONE out dir: B overwrites the
-    stage tables, so A's surviving lineage rows must NOT serve B's data —
-    the stage markers force recompute and A's second output equals A's
-    first (incl. a bucket-count change, which also exercises the full-
-    overwrite path that clears B's extra bucket partitions)."""
-    import tempfile
-
-    import pandas as pd
-
-    from kartograph_spark.pipeline import run_pipeline
-
-    tr = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "conv_id": [f"c{i}" for i in range(6) for _ in (0, 1)],
-                "turn_idx": pd.array([0, 1] * 6, dtype="int32"),
-                "role": ["user", "assistant"] * 6,
-                "text": [
-                    "Service <urn:Application:pay> uses Prometheus.",
-                    "It is running on AWS and calls Vault.",
-                ]
-                * 6,
-                "tool": [None, "query_dgraph"] * 6,
-                "ts": pd.to_datetime(["2026-01-01 00:00"] * 12).astype(
-                    "datetime64[us]"
-                ),
-            }
-        )
-    )
-    al = spark.createDataFrame(
-        [],
-        "alias_norm string, canonical_urn string, entity_type string,"
-        " canonical_name string",
-    )
+    stage tables, so its manifests must NOT let A resume — every stage
+    recomputes and A's second output equals A's first (incl. a bucket-
+    count change, which also exercises the full-overwrite path that
+    clears B's extra bucket partitions)."""
+    tr = _tiny_corpus(spark, TEXTS_A)
+    al = _empty_alias(spark)
     out = tempfile.mkdtemp(prefix="kg-roundtrip-")
 
     cfg_a = PipelineConfig(n_buckets=4, extra={"tag": "A"})
     cfg_b = PipelineConfig(n_buckets=8, extra={"tag": "B"})
     run_pipeline(spark, tr, al, out, cfg_a)
-    a1 = (
-        spark.read.parquet(f"{out}/triples")
-        .toPandas()
-        .sort_values(["subj", "pred", "obj"])
-        .reset_index(drop=True)
-    )
+    a1 = _triples_pdf(spark, out)
     # B: different config writes the same tables (same corpus here — the
     # point is the gating, not the content delta)
     run_pipeline(spark, tr, al, out, cfg_b)
-    # A again: lineage rows for A still exist, but the markers say the
-    # tables belong to B -> every stage must recompute, not resume
+    for stage in STAGES:
+        assert read_stage_marker(out, stage)["config_hash"] == cfg_b.config_hash
+    # A again: the manifests say the tables belong to B -> every stage
+    # must recompute, not resume
     m3 = run_pipeline(spark, tr, al, out, cfg_a)
-    a2 = (
-        spark.read.parquet(f"{out}/triples")
-        .toPandas()
-        .sort_values(["subj", "pred", "obj"])
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(
-        a1.astype({"turn_idx": "int64"}), a2.astype({"turn_idx": "int64"})
-    )
+    pd.testing.assert_frame_equal(a1, _triples_pdf(spark, out))
     assert m3["config_hash"] == cfg_a.config_hash
     # the mentions table must contain ONLY cfg_a's 4 buckets (full
     # overwrite cleared B's 8-bucket layout)
-    mb = spark.read.parquet(f"{out}/mentions").select("bucket").distinct()
-    assert {r["bucket"] for r in mb.collect()} <= set(range(4))
+    assert set(_bucket_files(out)) <= set(range(4))
+
+
+class Killed(RuntimeError):
+    pass
+
+
+def test_kill_before_manifest_write_never_serves_other_config(
+    spark, monkeypatch
+):
+    """Run A; run B on another corpus and kill it after its triples table
+    is written but before that stage's manifest lands; run A again: A
+    must recompute, not serve B's (or partly written) tables."""
+    al = _empty_alias(spark)
+    out = tempfile.mkdtemp(prefix="kg-kill-")
+    cfg_a = PipelineConfig(n_buckets=4, extra={"tag": "A"})
+    cfg_b = PipelineConfig(n_buckets=4, extra={"tag": "B"})
+
+    run_pipeline(spark, _tiny_corpus(spark, TEXTS_A), al, out, cfg_a)
+    a1 = _triples_pdf(spark, out)
+
+    real = pipeline.write_stage_marker
+
+    def dies_at_triples_manifest(root, stage, manifest):
+        if stage == "triples" and manifest is not None:
+            raise Killed(stage)
+        return real(root, stage, manifest)
+
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "write_stage_marker", dies_at_triples_manifest)
+        with pytest.raises(Killed):
+            run_pipeline(spark, _tiny_corpus(spark, TEXTS_B), al, out, cfg_b)
+    # the killed run did replace A's triples table with B's
+    assert not _triples_pdf(spark, out).equals(a1)
+
+    run_pipeline(spark, _tiny_corpus(spark, TEXTS_A), al, out, cfg_a)
+    pd.testing.assert_frame_equal(a1, _triples_pdf(spark, out))
+
+
+def test_missing_manifest_forces_full_overwrite(spark, transcripts_df):
+    """With no manifest nothing vouches for the mentions table's buckets:
+    a run with fewer buckets must fully overwrite, leaving none of the
+    old layout's extra bucket partitions."""
+    out = tempfile.mkdtemp(prefix="kg-nomanifest-")
+    store = TableStore(spark, out)
+    run_mentions_stage(spark, transcripts_df, store, PipelineConfig(n_buckets=8))
+    assert set(_bucket_files(out)) == set(range(8))
+    for stage in STAGES:
+        write_stage_marker(out, stage, None)
+
+    run_mentions_stage(spark, transcripts_df, store, PipelineConfig(n_buckets=4))
+    assert set(_bucket_files(out)) == set(range(4))

@@ -100,8 +100,11 @@ def main() -> None:
     for name, fn in queries.items():
         try:
             text = plan_text(fn(spark, sf_dir))
-        except Exception as e:  # plan-only failures should be visible
-            text = f"EXPLAIN FAILED: {e}"
+        except Exception as e:
+            # plan-only failures are visible in SUMMARY, but never replace
+            # a plan file already on record with an error stub
+            lines.append(f"{name}: EXPLAIN FAILED: {e}")
+            continue
         with open(os.path.join(out_dir, f"{name.split(' ')[0]}.txt"), "w") as f:
             f.write(text)
         lines.append(summarize(name, text))
