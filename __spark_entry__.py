@@ -104,7 +104,7 @@ def _kg_pipeline_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _kg_transcript_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E1 URN mention extraction (pre-canonicalization) over the seeded
-    transcript corpus — the mapInPandas extraction core cross-checked
+    transcript corpus — the JVM-native extractor cross-checked
     against a pure-SQL regexp oracle (EntityExtractor.ts:18-49 semantics:
     per-turn dedupe keeping first occurrence)."""
     from kartograph_spark.extraction.mentions import extract_mentions

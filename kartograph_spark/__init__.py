@@ -6,7 +6,7 @@ over tables of multi-turn conversation/agent transcripts
 ``(conv_id, turn_idx, role, text, tool, ts)``:
 
   scan -> stable (conv_id, turn_idx) window ordering
-       -> vectorized mention detection (Arrow/pandas UDFs, no per-row Python)
+       -> JVM-native mention detection (regex + array expressions, no Python worker)
        -> (subj, pred, obj) triple emission
        -> entity linking (blocking keys + broadcast join vs alias dictionary)
        -> connected-components canonicalization of coreferent entities

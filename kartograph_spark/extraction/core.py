@@ -8,8 +8,10 @@ the E1 URN-mention regex (EntityExtractor.ts:18-49), the E4 pattern classes
 patterns (docs/PROCESS.md:2123-2199).
 
 Everything is ``pd.Series.str.extractall`` — one regex pass per pattern
-class per Arrow batch, no per-row Python.  The same function body runs
-inside the Spark ``mapInPandas`` UDF and inside the pure-pandas oracle.
+class per batch, no per-row Python.  This body runs inside the pure-pandas
+oracle and the grouped cross-turn extractor (``applyInPandas``); the
+pipeline's map-only extractor is the independent JVM-native twin in
+extraction/mentions.py, checked row-for-row against it.
 
 Output row = one candidate mention:
   (conv_id, turn_idx, kind, match_idx, kind_rank, urn, entity_type,

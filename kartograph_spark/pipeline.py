@@ -1,8 +1,8 @@
 """End-to-end KG-construction pipeline (SURVEY.md §3.1 Spark equivalent).
 
 Stages:
-  1. mentions   — scan transcripts -> vectorized extraction (map-only,
-                  resumable per conversation hash-bucket)
+  1. mentions   — scan transcripts -> JVM-native regex extraction
+                  (map-only, resumable per conversation hash-bucket)
   2. canonical  — entity linking pairs + type normalization + connected
                   components -> broadcast rewrite
   3. triples    — edge/node/conversation triple emission -> first-
@@ -93,9 +93,10 @@ def run_mentions_stage(
     transcripts: DataFrame,
     store: TableStore,
     cfg: PipelineConfig,
-) -> DataFrame:
+) -> tuple[DataFrame, bool]:
     """Resumable extraction stage: skip buckets the manifest lists as
     done for this config hash (J8 semantics, orchestrator.py:589-597).
+    Returns the stored mentions and whether any bucket ran.
 
     Only a manifest of THIS config vouches for the table's other
     buckets, so only then is the write a dynamic per-bucket overwrite
@@ -140,7 +141,7 @@ def run_mentions_stage(
         got = obs.get
         counts = {b: int(got[f"b{b}"]) for b in pending}
         record_completed(store.root, "mentions", cfg.config_hash, counts)
-    return spark.read.parquet(store.path("mentions")).drop("bucket")
+    return spark.read.parquet(store.path("mentions")).drop("bucket"), bool(pending)
 
 
 def build_triples(
@@ -156,8 +157,8 @@ def build_triples(
     cfg = cfg or PipelineConfig()
     if mentions is None:
         # persist: the mention frame feeds type-norm, pair generation and
-        # the canonical rewrite — without this the extraction UDF re-runs
-        # once per downstream action.  Only the UDF input needs the
+        # the canonical rewrite — without this the extraction re-runs
+        # once per downstream action.  Only the extraction input needs the
         # under-split guard; conversation_triples is a partial aggregation
         # that parallelizes off the raw scan without a repartition shuffle.
         salted = ensure_parallelism(spark, transcripts, cfg.salt_turns)
@@ -196,20 +197,22 @@ def triples_chain(
     return val.split_broken_refs(tr.encode_final(resolved))
 
 
-def run_stage(root: str, stage: str, cfg: PipelineConfig, build) -> None:
+def run_stage(root: str, stage: str, cfg: PipelineConfig, build) -> bool:
     """Whole-stage resume for the global stages (canonical / triples /
     materialize): canonicalization and the first-occurrence dedup are
     corpus-global aggregations, so there is no per-bucket unit below the
     stage (the reference's resume has the same shape: per-chunk for
     extraction, whole-artifact for the restored entity store,
     orchestrator.py:484-536).  ``build()`` writes the stage's tables;
-    it runs unless this config's manifest says they are current."""
+    it runs unless this config's manifest says they are current.
+    Returns whether it ran."""
     manifest = read_stage_marker(root, stage)
     if manifest is not None and manifest["config_hash"] == cfg.config_hash:
-        return
+        return False
     write_stage_marker(root, stage, None)
     build()
     write_stage_marker(root, stage, {"config_hash": cfg.config_hash})
+    return True
 
 
 def run_pipeline(
@@ -228,13 +231,16 @@ def run_pipeline(
     triples + broken-ref report), ``materialize`` (graph/validation/
     report artifacts).  A re-run after a kill skips each stage whose
     manifest names this config hash and reads its stored output instead
-    of recomputing; outputs are overwrite-idempotent either way.
+    of recomputing; outputs are overwrite-idempotent either way.  The
+    rollup's ``skipped_stages`` names the stages resume skipped, and
+    ``triples_per_sec`` is None when the triples stage was one of them.
     """
     cfg = cfg or PipelineConfig()
     store = TableStore(spark, out_dir)
     t0 = time.time()
 
-    mentions = run_mentions_stage(spark, transcripts, store, cfg)
+    mentions, ran = run_mentions_stage(spark, transcripts, store, cfg)
+    skipped = [] if ran else ["mentions"]
 
     def canonical_stage():
         canonical, cmap = canonicalize_mentions(
@@ -243,7 +249,8 @@ def run_pipeline(
         store.write(canonical, "canonical_mentions")
         store.write(cmap, "canonical_map")
 
-    run_stage(store.root, "canonical", cfg, canonical_stage)
+    if not run_stage(store.root, "canonical", cfg, canonical_stage):
+        skipped.append("canonical")
     canonical = store.read("canonical_mentions")
     cmap = store.read("canonical_map")
 
@@ -252,7 +259,8 @@ def run_pipeline(
         store.write(kept, "triples", partition_by=["pred"])
         store.write(broken, "broken_refs")
 
-    run_stage(store.root, "triples", cfg, triples_stage)
+    if not run_stage(store.root, "triples", cfg, triples_stage):
+        skipped.append("triples")
     kept = store.read("triples")
     broken = store.read("broken_refs")
 
@@ -271,7 +279,8 @@ def run_pipeline(
             manifest, infer_type_predicates(kept), out_dir
         )
 
-    run_stage(store.root, "materialize", cfg, materialize_stage)
+    if not run_stage(store.root, "materialize", cfg, materialize_stage):
+        skipped.append("materialize")
 
     errors = store.read("validation_errors")
     dur = time.time() - t0
@@ -290,7 +299,13 @@ def run_pipeline(
         "low_confidence_logged": store.read("low_confidence_log").count(),
         "validation_errors": errors.count(),
         "duration_secs": round(dur, 3),
-        "triples_per_sec": round(n_triples / dur, 1) if dur > 0 else None,
+        # no throughput from a run that emitted no triples itself
+        "triples_per_sec": (
+            round(n_triples / dur, 1)
+            if dur > 0 and "triples" not in skipped
+            else None
+        ),
+        "skipped_stages": skipped,
         "config_hash": cfg.config_hash,
     }
     write_metrics(out_dir, metrics)

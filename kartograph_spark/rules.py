@@ -1,9 +1,11 @@
 """Deterministic extraction rule set — the single source of truth.
 
-Both the Spark pipeline (pandas/Arrow UDFs) and the pure-pandas oracle
-import THIS module, so rule parity is by construction; correctness vs the
-reference is pinned separately by unit tests transcribed from the
-reference's own test cases.
+Every engine takes its patterns from THIS module: the pandas core (the
+pandas oracle and the cross-turn grouped extractor), the JVM-native Spark
+extractor (through ``java_re``) and the DuckDB driver oracles, so the
+rules cannot drift; ``tests/test_regex_parity.py`` pins that the three
+regex engines agree, and correctness vs the reference is pinned by unit
+tests transcribed from the reference's own test cases.
 
 Reference semantics captured here:
 
@@ -201,13 +203,19 @@ def combined_position_re() -> str:
 
 
 def combined_position_re_sql() -> str:
-    """RE2-safe variant with no capture groups (DuckDB extracts group 0)."""
+    """RE2-safe variant with no capture groups (DuckDB and Spark extract
+    group 0).  Every verb pattern opens with ``\\b``, so one ``\\b`` is
+    factored out in front of their alternation: the same matches, but a
+    backtracking engine (Java) tests the boundary once per position
+    instead of once per pattern."""
     import re as _re2
 
-    parts = [r"<urn:[^:]+:[^>]+>"]
+    verbs = []
     for _kind, pat, _pred, _etype in ALL_PATTERNS:
-        parts.append(_re2.sub(r"\((?!\?)", "(?:", pat, count=1))
-    return "|".join(parts)
+        if not pat.startswith(r"\b"):
+            raise ValueError(f"verb pattern must open with \\b: {pat!r}")
+        verbs.append(_re2.sub(r"\((?!\?)", "(?:", pat[2:], count=1))
+    return r"<urn:[^:]+:[^>]+>|\b(?:" + "|".join(verbs) + ")"
 
 
 #: combined scan patterns, built once at import
@@ -345,10 +353,10 @@ def slugify(name: pd.Series) -> pd.Series:
     )
 
 
-#: RE2 class of every character ``str.isspace`` accepts — what Python's
-#: ``strip()`` and ``\s`` treat as whitespace (RE2's own ``\s`` lacks \v,
-#: \x1c-\x1f and the non-ASCII spaces)
-_WS_RE2 = (
+#: RE2/Java class of every character ``str.isspace`` accepts — what
+#: Python's ``strip()`` and ``\s`` treat as whitespace (RE2's own ``\s``
+#: lacks \v, \x1c-\x1f and the non-ASCII spaces, Java's the last two)
+WS_CLASS = (
     r"\t-\r\x{1c}-\x{20}\x{85}\x{a0}\x{1680}\x{2000}-\x{200a}"
     r"\x{2028}\x{2029}\x{202f}\x{205f}\x{3000}"
 )
@@ -356,8 +364,35 @@ _WS_RE2 = (
 
 def slug_sql(expr: str) -> str:
     """DuckDB twin of ``slugify`` for the SQL oracles."""
-    stripped = f"regexp_replace({expr}, '^[{_WS_RE2}]+|[{_WS_RE2}]+$', '', 'g')"
-    return f"regexp_replace(lower({stripped}), '[{_WS_RE2}_]+', '-', 'g')"
+    stripped = f"regexp_replace({expr}, '^[{WS_CLASS}]+|[{WS_CLASS}]+$', '', 'g')"
+    return f"regexp_replace(lower({stripped}), '[{WS_CLASS}_]+', '-', 'g')"
+
+
+#: Java class of Python's ``\w`` on ``str`` (``isalnum()`` or '_')
+_WORD_JAVA = r"[\p{L}\p{N}_]"
+
+
+def java_re(pat: str) -> str:
+    """A taxonomy pattern rendered for Java regex (Spark's regexp
+    functions) with Python's ``str`` semantics: ``\\s`` becomes the
+    ``str.isspace`` set (Java's is ASCII-only) and ``\\b`` a lookaround on
+    Python's word class (Java's depends on the JDK).  Every other token
+    means the same in both engines."""
+    import re as _re2
+
+    w = _WORD_JAVA
+    out, in_class = [], False
+    for tok in _re2.findall(r"\\.|.", pat, flags=_re2.S):
+        if tok == r"\s":
+            tok = WS_CLASS if in_class else f"[{WS_CLASS}]"
+        elif tok == r"\b" and not in_class:
+            tok = f"(?:(?<={w})(?!{w})|(?<!{w})(?={w}))"
+        elif tok == "[":
+            in_class = True
+        elif tok == "]":
+            in_class = False
+        out.append(tok)
+    return "".join(out)
 
 
 def alias_norm(name: pd.Series) -> pd.Series:

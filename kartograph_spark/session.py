@@ -6,8 +6,11 @@ sandbox: local[32] single JVM):
 - AQE on: runtime partition coalescing + skew-join splitting cover the
   hot-entity / long-conversation skew the reference handled by hand
   (chunk binary-split, /root/reference/extraction/kg_extractor/orchestrator.py:637-687).
-- Arrow enabled: every extraction UDF is pandas/Arrow-vectorized
-  (input_hint: no per-row Python).
+- Arrow enabled for the pandas surfaces that remain (the cross-turn
+  grouped extractor, datapipe UDFs, ``toPandas``); the pipeline's own
+  extraction is JVM-native and starts no Python worker.
+- Driver heap fits the host: a quarter of physical RAM, at most 16 g,
+  unless ``SPARK_DRIVER_MEM`` says otherwise.
 - shuffle.partitions sized by caller; on a real cluster set ~2-3x total
   cores and let AQE coalesce down.
 """
@@ -17,6 +20,17 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: the driver heap never defaults above this
+MAX_DRIVER_MB = 16 * 1024
+
+
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """Default ``spark.driver.memory``: a quarter of physical RAM (read
+    with ``os.sysconf`` unless given), capped at 16 g."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(phys_bytes // 4 // 2**20, MAX_DRIVER_MB)}m"
 
 
 def get_spark(
@@ -50,7 +64,10 @@ def get_spark(
         # yields thousands of splits, so the smaller one costs nothing.
         .config("spark.sql.files.maxPartitionBytes", "33554432")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     if extra_conf:

@@ -5,7 +5,7 @@ incremental per-N-chunks dedup loop (orchestrator.py:849-892).  These
 operators are the Spark-native incremental path over the same semantics:
 
 - ``stream_mentions``: readStream over a growing transcripts directory ->
-  the SAME vectorized extraction UDF as the batch path -> parquet sink.
+  the SAME JVM-native extraction as the batch path -> parquet sink.
   ``Trigger.AvailableNow`` + the file-source checkpoint give exactly the
   reference's resume contract (process everything new, skip everything
   already done, idempotent across restarts) — the file-source ledger plays
@@ -76,7 +76,7 @@ def stream_review_flags(
     checkpoint_path: str,
 ) -> StreamingQuery:
     """Incremental MEDIUM-tier review flags (PROCESS.md:2149-2156): the
-    same extraction UDF as the batch path, filtered to the withheld
+    same extraction as the batch path, filtered to the withheld
     indirect relationships and sunk as an append-only review queue.
 
     These flags are PRE-canonicalization (canonicalization is a

@@ -580,3 +580,92 @@ def test_colliding_kinds_dedupe_by_rank_not_position():
     assert len(runs) == 1
     assert runs.iloc[0]["kind"] == "running_on"
     assert runs.iloc[0]["match_idx"] == 0
+
+
+# --------------------------------------------------------------------------
+# JVM-native extractor: row equality on the regex-parity boundary, and no
+# Python worker in the plan
+# --------------------------------------------------------------------------
+
+
+def test_native_matches_pandas_on_unicode_whitespace(spark):
+    """Python's \\s / strip() are Unicode, Java's \\s and Spark's trim are
+    not: a URL ends at \\xa0 / \\u2003 (not at an em dash), a \\x1c inside
+    a tool name slugs to '-', JSON keys accept Unicode spaces before the
+    value, and an empty "path" field fires no path rule.  A native port
+    that used Java's ASCII \\s would differ on every one of these rows."""
+    pdf = pd.DataFrame(
+        {
+            "conv_id": ["u1"] * 6,
+            "turn_idx": list(range(6)),
+            "text": [
+                "see https://git.example.com/a\xa0and https://x.io/b\u2003ok",
+                "em https://x.io/c—d, <urn:Service:pay-svc> uses Vault",
+                '{"path": "", "name": "pay svc", "owner": "o", "endpoints": []}',
+                '{"name":\xa0"\u2003Core\x1cOps ", "cluster":\u2003"c", "namespace": "n"}',
+                "tabs\tuses Redis\x0bthen\x1cdeployed via Argo",
+                None,
+            ],
+            "tool": [None, "web\x1csearch", " \u2003query_dgraph\xa0", None, "a\x85b", "t"],
+        }
+    )
+    key = ["conv_id", "turn_idx", "kind_rank", "match_idx"]
+    got = (
+        extract_mentions(spark.createDataFrame(pdf, "conv_id string, turn_idx long, text string, tool string"))
+        .toPandas()
+        .sort_values(key)
+        .reset_index(drop=True)
+    )
+    exp = extract_mentions_block(pdf).sort_values(key).reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, exp)
+    # the boundary cases really are in the expected rows
+    assert "urn:CodeRepository:https://git.example.com/a" in set(exp["urn"])
+    assert "urn:CodeRepository:https://x.io/b" in set(exp["urn"])
+    assert "urn:CodeRepository:https://x.io/c—d" in set(exp["urn"])
+    assert "urn:Tool:web-search" in set(exp["urn"])
+    assert "urn:Namespace:core-ops" in set(exp["urn"])
+
+
+def test_extraction_plans_start_no_python_worker(spark, transcripts_df, alias_df):
+    """extract_mentions, low_confidence_log and build_triples run in the
+    JVM: no Python-worker node anywhere in their optimized plans (cached
+    sub-plans included).  The grouped cross-turn extractor is the control
+    that the check sees such nodes."""
+    from kartograph_spark.extraction.mentions import (
+        extract_mentions_grouped,
+        low_confidence_log,
+    )
+    from kartograph_spark.pipeline import build_triples
+
+    python_nodes = (
+        "MapInPandas",
+        "ArrowEvalPython",
+        "BatchEvalPython",
+        "FlatMapGroupsInPandas",
+    )
+
+    def plan(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    kept, _broken = build_triples(spark, transcripts_df, alias_df)
+    for df in (extract_mentions(transcripts_df), low_confidence_log(transcripts_df), kept):
+        p = plan(df)
+        assert not [n for n in python_nodes if n in p], p
+    assert "FlatMapGroupsInPandas" in plan(extract_mentions_grouped(transcripts_df))
+
+
+def test_native_schemas_match_declared(spark, transcripts_df):
+    """Downstream readers rely on the declared column order and types."""
+    from kartograph_spark.extraction.mentions import (
+        LOW_LOG_SCHEMA,
+        MENTION_SCHEMA,
+        low_confidence_log,
+    )
+
+    def shape(schema):
+        return [(f.name, f.dataType) for f in schema]
+
+    assert shape(extract_mentions(transcripts_df).schema) == shape(MENTION_SCHEMA)
+    no_tool = transcripts_df.drop("tool")
+    assert shape(extract_mentions(no_tool).schema) == shape(MENTION_SCHEMA)
+    assert shape(low_confidence_log(transcripts_df).schema) == shape(LOW_LOG_SCHEMA)

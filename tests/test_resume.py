@@ -6,6 +6,7 @@ uniquely, so a table (or bucket partition) that was not rewritten keeps
 its exact file set."""
 
 import glob
+import json
 import os
 import shutil
 import tempfile
@@ -202,6 +203,14 @@ def test_full_pipeline_rerun_skips_everything(spark, transcripts_df, alias_df):
     assert not os.path.exists(os.path.join(out, "lineage"))
     for k in ("triples", "entities", "edges", "mentions", "review_flags"):
         assert m1[k] == m2[k], k
+    # the rollup says what resume skipped, and a run that emitted no
+    # triples reports no throughput
+    assert m1["skipped_stages"] == []
+    assert m2["skipped_stages"] == list(STAGES)
+    assert m1["triples_per_sec"] is not None
+    assert m2["triples_per_sec"] is None
+    with open(os.path.join(out, "metrics.json")) as f:
+        assert json.load(f)["skipped_stages"] == list(STAGES)
 
 
 def test_config_round_trip_recomputes(spark):
@@ -282,3 +291,45 @@ def test_missing_manifest_forces_full_overwrite(spark, transcripts_df):
 
     run_mentions_stage(spark, transcripts_df, store, PipelineConfig(n_buckets=4))
     assert set(_bucket_files(out)) == set(range(4))
+
+
+def _truncate(path):
+    """Cut a parquet part file in half: its footer is gone, so any read
+    of it fails."""
+    with open(path, "r+b") as f:
+        f.truncate(os.path.getsize(path) // 2)
+
+
+def test_partial_parquet_is_rewritten_not_read(spark, transcripts_df, alias_df):
+    """A kill can leave a stage's table half written: a truncated part
+    file, a bucket with no files.  With the stage's manifest gone, the
+    re-run overwrites the table instead of reading it — the truncated
+    file disappears and the triples equal the first build's.  Checked for
+    the per-bucket mentions table and for the global triples table."""
+    cfg = PipelineConfig(n_buckets=8)
+    out = tempfile.mkdtemp(prefix="kg-partial-")
+    run_pipeline(spark, transcripts_df, alias_df, out, cfg)
+    baseline = _triples_pdf(spark, out)
+
+    # mentions: one bucket's part file truncated, another bucket emptied
+    by_bucket = _bucket_files(out)
+    cut, gone = sorted(by_bucket)[:2]
+    cut_file = os.path.join(out, "mentions", f"bucket={cut}", sorted(by_bucket[cut])[0])
+    _truncate(cut_file)
+    for name in by_bucket[gone]:
+        os.remove(os.path.join(out, "mentions", f"bucket={gone}", name))
+    write_stage_marker(out, "mentions", None)
+    m = run_pipeline(spark, transcripts_df, alias_df, out, cfg)
+    pd.testing.assert_frame_equal(baseline, _triples_pdf(spark, out))
+    assert not os.path.exists(cut_file)
+    assert set(_bucket_files(out)) == set(by_bucket)
+    assert "mentions" not in m["skipped_stages"]
+
+    # triples: one part file truncated
+    cut_file = os.path.join(out, "triples", sorted(_files(out, "triples"))[0])
+    _truncate(cut_file)
+    write_stage_marker(out, "triples", None)
+    m = run_pipeline(spark, transcripts_df, alias_df, out, cfg)
+    pd.testing.assert_frame_equal(baseline, _triples_pdf(spark, out))
+    assert not os.path.exists(cut_file)
+    assert "triples" not in m["skipped_stages"]
