@@ -3,7 +3,10 @@
 Mirrors the reference's checkpoint invalidation rule: a checkpoint is only
 reusable when the config hash matches
 (/root/reference/extraction/kg_extractor/config.py:319-336 — sha256 of the
-canonical config, first 16 hex chars).
+canonical config, first 16 hex chars).  The hash also covers the rule
+text (``extraction.mentions.RULES_DIGEST``: the ``rules`` pattern strings
+and the generated extraction SQL), so editing a rule invalidates resume
+with no version to bump.
 """
 
 from __future__ import annotations
@@ -11,6 +14,8 @@ from __future__ import annotations
 import hashlib
 import json
 from dataclasses import asdict, dataclass, field
+
+from kartograph_spark.extraction import mentions
 
 
 @dataclass(frozen=True)
@@ -26,15 +31,10 @@ class PipelineConfig:
     #: (chunk-split analog, orchestrator.py:637-687): conversations are
     #: further split into (conv_id, turn_idx // salt_turns) Arrow groups.
     salt_turns: int = 1024
-    #: rule-set version — bump when extraction rules change so resume
-    #: invalidates (config-hash semantics)
-    #: v2: entity-subject attribution for verb mentions
-    #: v3: MEDIUM indirect tier + usedTool emission + E3 struct detection
-    rules_version: str = "3"
     extra: dict = field(default_factory=dict, hash=False, compare=False)
 
     @property
     def config_hash(self) -> str:
-        payload = asdict(self)
+        payload = {**asdict(self), "rules": mentions.RULES_DIGEST}
         blob = json.dumps(payload, sort_keys=True, default=str)
         return hashlib.sha256(blob.encode()).hexdigest()[:16]

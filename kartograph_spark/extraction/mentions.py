@@ -27,6 +27,9 @@ entity_extraction.yaml:77-81, docs/PROCESS.md:2123-2199.
 
 from __future__ import annotations
 
+import hashlib
+import json
+
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
@@ -311,15 +314,46 @@ LOW_LOG_SCHEMA = T.StructType(
 )
 
 
-def low_confidence_log(transcripts: DataFrame) -> DataFrame:
-    """LOW-tier manual-review log (PROCESS.md:2158-2163): vague /
-    ambiguous / conditional mentions, logged and NOT extracted.  Pure
-    map stage over (conv_id, turn_idx, text), like extract_mentions:
-    one scan per LOW pattern, match_idx = the per-pattern ordinal."""
-    rows = ", ".join(
+def _low_log_rows() -> str:
+    """One scan per LOW pattern, match_idx = the per-pattern ordinal."""
+    return "concat(" + ", ".join(
         f"transform({_scan(_TEXT, pat)}, (s, i) -> named_struct("
         f"'kind', {_q(kind)}, 'match_idx', CAST(i AS BIGINT),"
         f" 'surface', s, 'reason', {_q(reason)}))"
         for kind, pat, reason in rules.LOW_PATTERNS
-    )
-    return _turns(transcripts, f"inline(concat({rows}))")
+    ) + ")"
+
+
+def low_confidence_log(transcripts: DataFrame) -> DataFrame:
+    """LOW-tier manual-review log (PROCESS.md:2158-2163): vague /
+    ambiguous / conditional mentions, logged and NOT extracted.  Pure
+    map stage over (conv_id, turn_idx, text), like extract_mentions."""
+    return _turns(transcripts, f"inline({_low_log_rows()})")
+
+
+def rules_digest() -> str:
+    """sha256 of every rule the pipeline's output depends on: the
+    ``rules`` constants (pattern strings, ranks, encode chain — every
+    upper-case module value) and the generated extraction SQL.  Part of
+    ``PipelineConfig.config_hash``, so a rule edit invalidates resume
+    without a hand-bumped version."""
+    constants = {
+        k: v
+        for k, v in vars(rules).items()
+        if k.isupper() and isinstance(v, (str, int, list, tuple, dict, frozenset))
+    }
+    sql = [
+        _combined_scan(),
+        _combined_mentions("_c"),
+        *_pattern_mentions(),
+        _struct_mention(),
+        _tool_mention(),
+        _keep_first("_m"),
+        _low_log_rows(),
+    ]
+    blob = json.dumps([constants, sql], sort_keys=True, default=sorted)
+    return hashlib.sha256(blob.encode()).hexdigest()[:16]
+
+
+#: the digest of the rules this process extracts with, computed once
+RULES_DIGEST = rules_digest()

@@ -12,7 +12,10 @@ Outputs:
 
 Table format: Iceberg when the runtime is on the classpath, else
 partitioned parquet with identical layout (TableStore below) — the write
-API is format-agnostic so a real cluster flips one config.
+API is format-agnostic so a real cluster flips one config.  A table is
+read back with the schema recorded at its write, so a read launches no
+schema-inference job (and an empty table, which has no footer to infer
+from, reads as zero rows).
 """
 
 from __future__ import annotations
@@ -22,6 +25,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from kartograph_spark import rules
 
@@ -34,18 +38,56 @@ def _iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
+def _as_nullable(dt: T.DataType) -> T.DataType:
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [
+                T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+                for f in dt
+            ]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
+def read_back_schema(
+    schema: T.StructType, partition_by: list[str] | None = None
+) -> dict:
+    """JSON of the schema ``spark.read.parquet`` infers for a table written
+    from ``schema``: every field nullable (parquet writes store them so),
+    partition columns last in ``partition_by`` order.  A partition column
+    keeps its written type, which is what inference reads off the
+    directory names of this pipeline's tables (int buckets, string
+    preds/types); unlike inference, it stays a string even when every
+    value happens to look like a number."""
+    parts = list(partition_by or ())
+    fields = [f for f in schema if f.name not in parts]
+    fields += [T.StructField(p, schema[p].dataType) for p in parts]
+    return _as_nullable(T.StructType(fields)).jsonValue()
+
+
 class TableStore:
     """Minimal table-format abstraction: Iceberg if present, else parquet.
 
     On a real cluster with an Iceberg catalog configured, writes become
     ``writeTo(...).createOrReplace()`` against the catalog; in this sandbox
     (no Iceberg jars) identical partitioned parquet layout is used.
+
+    ``schemas`` holds the read-back schema of every table this store wrote
+    or was told about (``pipeline.run_stage`` loads a skipped stage's from
+    its resume manifest); ``read`` passes it to the reader, so reading a
+    table launches no schema-inference job.  There is no inference
+    fallback: reading a table the store has no schema for is a KeyError.
     """
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
         self.iceberg = _iceberg_available(spark)
+        self.schemas: dict[str, dict] = {}
 
     def path(self, name: str) -> str:
         return os.path.join(self.root, name)
@@ -55,15 +97,11 @@ class TableStore:
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(self.path(name))
+        self.schemas[name] = read_back_schema(df.schema, partition_by)
 
     def read(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(name))
-
-    def exists(self, name: str) -> bool:
-        p = self.path(name)
-        return os.path.exists(p) and bool(
-            [f for f in os.listdir(p) if not f.startswith(".")]
-        )
+        schema = T.StructType.fromJson(self.schemas[name])
+        return self.spark.read.schema(schema).parquet(self.path(name))
 
 
 def build_nodes(triples: DataFrame, strategy: str = "first") -> DataFrame:

@@ -16,6 +16,11 @@ Resume: each stage's one record is its ``resume/<stage>.json`` manifest
 after its table commit, so a stage is skipped only when its tables were
 last fully written by this config.
 
+Bookkeeping launches no job: the run counts are ``Observation``s on the
+write jobs that already run (``write_counted``) and land in the stage's
+manifest, so a skipped stage reports its stored counts; every table is
+read back with the schema its manifest stores, so no read infers one.
+
 Shuffle budget (design-for-100TB): the extraction stage is shuffle-free;
 canonicalization shuffles only entity-vocabulary-sized frames; the one
 corpus-sized shuffle is the dedup groupBy on (subj,pred,obj) — map-side
@@ -26,8 +31,11 @@ across (pred,obj) combinations.
 from __future__ import annotations
 
 import time
+from collections import Counter
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+import pandas as pd
+
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from kartograph_spark import triples as tr
@@ -44,10 +52,12 @@ from kartograph_spark.graph import (
     build_nodes,
     infer_schema_manifest,
     infer_type_predicates,
+    read_back_schema,
     write_schema_artifacts,
 )
 from kartograph_spark.lineage import (
     completed_partitions,
+    is_current,
     read_stage_marker,
     record_completed,
     write_metrics,
@@ -58,6 +68,76 @@ from kartograph_spark.reports import (
     save_metrics_reports,
     save_validation_reports,
 )
+
+
+#: the tables each stage writes; its manifest stores their read-back schemas
+STAGE_TABLES = {
+    "mentions": ("mentions",),
+    "canonical": ("canonical_mentions", "canonical_map"),
+    "triples": ("triples", "broken_refs"),
+    "materialize": (
+        "validation_errors",
+        "validation_summary",
+        "review_flags",
+        "low_confidence_log",
+        "graph_nodes",
+        "graph_edges",
+    ),
+}
+
+#: the run counts of the metrics rollup, in ``metrics.json`` order
+ROLLUP_COUNTS = (
+    "turns",
+    "conversations",
+    "mentions",
+    "merged_entities",
+    "entities",
+    "edges",
+    "triples",
+    "broken_refs",
+    "orphans",
+    "review_flags",
+    "low_confidence_logged",
+    "validation_errors",
+)
+
+#: how long an Observation may trail its action: Spark completes it from
+#: the listener bus, milliseconds after the action returns
+OBSERVATION_WAIT_S = 60.0
+
+
+def observed(obs: Observation) -> dict:
+    """``obs``'s metrics, taken right after the action that ran its plan.
+
+    ``Observation.get`` blocks until the metrics arrive, so a plan whose
+    action never ran the observed node would hang the run; wait a bounded
+    time for them instead and fail loudly."""
+    done = obs._jo.future().isCompleted  # noqa: SLF001
+    deadline = time.monotonic() + OBSERVATION_WAIT_S
+    while not done():
+        if time.monotonic() > deadline:
+            raise RuntimeError("observed metrics did not arrive after their action")
+        time.sleep(0.005)
+    return obs.get
+
+
+def write_counted(
+    store: TableStore,
+    df: DataFrame,
+    name: str,
+    partition_by: list[str] | None = None,
+    **metrics: Column,
+) -> dict:
+    """Write table ``name`` and return ``metrics`` (aggregate columns by
+    name) observed on the write job itself: counts without a count job."""
+    obs = Observation()
+    df = df.observe(obs, *(c.alias(k) for k, c in metrics.items()))
+    store.write(df, name, partition_by)
+    return observed(obs)
+
+
+def rows() -> Column:
+    return F.count(F.lit(1))
 
 
 def bucket_col(n_buckets: int):
@@ -138,10 +218,14 @@ def run_mentions_stage(
         if done:
             w = w.option("partitionOverwriteMode", "dynamic")
         w.partitionBy("bucket").parquet(store.path("mentions"))
-        got = obs.get
+        got = observed(obs)
         counts = {b: int(got[f"b{b}"]) for b in pending}
-        record_completed(store.root, "mentions", cfg.config_hash, counts)
-    return spark.read.parquet(store.path("mentions")).drop("bucket"), bool(pending)
+        schema = read_back_schema(mentions.schema, ["bucket"])
+        record_completed(
+            store.root, "mentions", cfg.config_hash, counts, {"mentions": schema}
+        )
+    store.schemas.update(read_stage_marker(store.root, "mentions")["schemas"])
+    return store.read("mentions").drop("bucket"), bool(pending)
 
 
 def build_triples(
@@ -168,18 +252,24 @@ def build_triples(
     canonical, _cmap = canonicalize_mentions(
         mentions, alias_dict, cfg.confidence_threshold
     )
-    return triples_chain(canonical, transcripts)
+    kept, broken, _corpus = triples_chain(canonical, transcripts)
+    return kept, broken
 
 
 def triples_chain(
     canonical: DataFrame, transcripts: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """Canonical mentions -> (kept_triples, broken_ref_report): emission,
-    first-occurrence dedup, uid>scalar resolution, encode, broken-ref
-    split.  The one copy of the chain, shared by build_triples and the
+) -> tuple[DataFrame, DataFrame, dict]:
+    """Canonical mentions -> (kept_triples, broken_ref_report, corpus):
+    emission, first-occurrence dedup, uid>scalar resolution, encode,
+    broken-ref split.  ``corpus`` holds the whole-corpus ``turns`` and
+    ``conversations`` counts, observed on the conversation aggregate.
+    The one copy of the chain, shared by build_triples and the
     run_pipeline triples stage."""
+    # unnamed: a fresh name per call, so the persisted plan below never
+    # matches an earlier call's cache, whose node would not report here
+    corpus = Observation()
     raw = tr.mention_triples(canonical).unionByName(
-        tr.conversation_triples(transcripts)
+        tr.conversation_triples(transcripts, corpus)
     )
     # persist the deduped triples, not the encoded ones: the uid-predicate
     # collect (resolve, a global second pass) and the validation fan-out
@@ -189,30 +279,42 @@ def triples_chain(
     # The uid-predicate collect IS the eager materialization action: it
     # computes every partition into the cache (AQE would otherwise race
     # the downstream branches into independent recomputes — observed 6x)
-    # while returning the resolve input, one job instead of two.
+    # while returning the resolve input, one job instead of two — and it
+    # runs the conversation aggregate, so the corpus counts arrive with it.
     deduped = tr.dedup_first_occurrence(raw).persist()
-    resolved = tr.apply_uid_resolution(
-        deduped, tr.collect_uid_predicates(deduped)
-    )
-    return val.split_broken_refs(tr.encode_final(resolved))
+    uid_preds = tr.collect_uid_predicates(deduped)
+    corpus_counts = observed(corpus)
+    resolved = tr.apply_uid_resolution(deduped, uid_preds)
+    kept, broken = val.split_broken_refs(tr.encode_final(resolved))
+    return kept, broken, corpus_counts
 
 
-def run_stage(root: str, stage: str, cfg: PipelineConfig, build) -> bool:
+def run_stage(
+    store: TableStore, stage: str, cfg: PipelineConfig, build
+) -> tuple[dict, bool]:
     """Whole-stage resume for the global stages (canonical / triples /
     materialize): canonicalization and the first-occurrence dedup are
     corpus-global aggregations, so there is no per-bucket unit below the
     stage (the reference's resume has the same shape: per-chunk for
     extraction, whole-artifact for the restored entity store,
-    orchestrator.py:484-536).  ``build()`` writes the stage's tables;
-    it runs unless this config's manifest says they are current.
-    Returns whether it ran."""
-    manifest = read_stage_marker(root, stage)
-    if manifest is not None and manifest["config_hash"] == cfg.config_hash:
-        return False
-    write_stage_marker(root, stage, None)
-    build()
-    write_stage_marker(root, stage, {"config_hash": cfg.config_hash})
-    return True
+    orchestrator.py:484-536).  ``build()`` writes the stage's tables and
+    returns what its write jobs observed (``{"counts": ...}``, plus the
+    ``ebt`` histogram for materialize); it runs unless this config's
+    manifest says the tables are current.  Either way the store knows the
+    stage's table schemas afterwards.  Returns the stage's manifest and
+    whether it ran."""
+    manifest = read_stage_marker(store.root, stage)
+    if is_current(manifest, cfg.config_hash):
+        store.schemas.update(manifest["schemas"])
+        return manifest, False
+    write_stage_marker(store.root, stage, None)
+    manifest = {
+        "config_hash": cfg.config_hash,
+        **build(),
+        "schemas": {t: store.schemas[t] for t in STAGE_TABLES[stage]},
+    }
+    write_stage_marker(store.root, stage, manifest)
+    return manifest, True
 
 
 def run_pipeline(
@@ -234,6 +336,11 @@ def run_pipeline(
     of recomputing; outputs are overwrite-idempotent either way.  The
     rollup's ``skipped_stages`` names the stages resume skipped, and
     ``triples_per_sec`` is None when the triples stage was one of them.
+
+    The rollup adds up the counts the stage manifests hold, as the
+    reference's rollup adds up counters the run already holds
+    (orchestrator.py:1003-1017): a resumed run reports the counts of its
+    stored output and launches no job for them.
     """
     cfg = cfg or PipelineConfig()
     store = TableStore(spark, out_dir)
@@ -241,25 +348,36 @@ def run_pipeline(
 
     mentions, ran = run_mentions_stage(spark, transcripts, store, cfg)
     skipped = [] if ran else ["mentions"]
+    n_mentions = sum(read_stage_marker(store.root, "mentions")["rows"].values())
 
     def canonical_stage():
         canonical, cmap = canonicalize_mentions(
             mentions, alias_dict, cfg.confidence_threshold
         )
         store.write(canonical, "canonical_mentions")
-        store.write(cmap, "canonical_map")
+        return {
+            "counts": write_counted(
+                store, cmap, "canonical_map", merged_entities=rows()
+            )
+        }
 
-    if not run_stage(store.root, "canonical", cfg, canonical_stage):
+    canon, ran = run_stage(store, "canonical", cfg, canonical_stage)
+    if not ran:
         skipped.append("canonical")
     canonical = store.read("canonical_mentions")
-    cmap = store.read("canonical_map")
 
     def triples_stage():
-        kept, broken = triples_chain(canonical, transcripts)
-        store.write(kept, "triples", partition_by=["pred"])
-        store.write(broken, "broken_refs")
+        kept, broken, corpus = triples_chain(canonical, transcripts)
+        return {
+            "counts": {
+                **corpus,
+                **write_counted(store, kept, "triples", ["pred"], triples=rows()),
+                **write_counted(store, broken, "broken_refs", broken_refs=rows()),
+            }
+        }
 
-    if not run_stage(store.root, "triples", cfg, triples_stage):
+    trip, ran = run_stage(store, "triples", cfg, triples_stage)
+    if not ran:
         skipped.append("triples")
     kept = store.read("triples")
     broken = store.read("broken_refs")
@@ -268,36 +386,56 @@ def run_pipeline(
         orphans = val.find_orphans(kept)
         rec_errors = val.record_errors(canonical)
         errors = broken.unionByName(orphans).unionByName(rec_errors)
-        store.write(errors, "validation_errors")
+        counts = write_counted(
+            store,
+            errors,
+            "validation_errors",
+            validation_errors=rows(),
+            orphans=F.count_if(F.col("message").startswith("orphan")),
+        )
         store.write(val.validation_summary(errors), "validation_summary")
-        store.write(val.review_flags(canonical), "review_flags")
-        store.write(low_confidence_log(transcripts), "low_confidence_log")
-        store.write(build_nodes(kept), "graph_nodes", partition_by=["type"])
-        store.write(build_edges(kept), "graph_edges", partition_by=["pred"])
+        counts |= write_counted(
+            store, val.review_flags(canonical), "review_flags", review_flags=rows()
+        )
+        counts |= write_counted(
+            store,
+            low_confidence_log(transcripts),
+            "low_confidence_log",
+            low_confidence_logged=rows(),
+        )
+        # the entities-by-type histogram rides the node write too: its
+        # type list is entity-vocabulary-sized, as the node table is
+        nodes = write_counted(
+            store,
+            build_nodes(kept),
+            "graph_nodes",
+            ["type"],
+            entities=rows(),
+            types=F.collect_list("type"),
+        )
+        counts["entities"] = nodes["entities"]
+        counts |= write_counted(
+            store, build_edges(kept), "graph_edges", ["pred"], edges=rows()
+        )
         manifest = infer_schema_manifest(kept)
         write_schema_artifacts(
             manifest, infer_type_predicates(kept), out_dir
         )
+        return {"counts": counts, "ebt": dict(Counter(nodes["types"]))}
 
-    if not run_stage(store.root, "materialize", cfg, materialize_stage):
+    mat, ran = run_stage(store, "materialize", cfg, materialize_stage)
+    if not ran:
         skipped.append("materialize")
 
-    errors = store.read("validation_errors")
     dur = time.time() - t0
-    n_triples = kept.count()
-    metrics = {
-        "turns": transcripts.count(),
-        "conversations": transcripts.select("conv_id").distinct().count(),
-        "mentions": mentions.count(),
-        "merged_entities": cmap.count(),
-        "entities": val.node_urns(kept).count(),
-        "edges": store.read("graph_edges").count(),
-        "triples": n_triples,
-        "broken_refs": broken.count(),
-        "orphans": errors.filter(F.col("message").startswith("orphan")).count(),
-        "review_flags": store.read("review_flags").count(),
-        "low_confidence_logged": store.read("low_confidence_log").count(),
-        "validation_errors": errors.count(),
+    counts = {
+        "mentions": n_mentions,
+        **canon["counts"],
+        **trip["counts"],
+        **mat["counts"],
+    }
+    n_triples = counts["triples"]
+    metrics = {k: counts[k] for k in ROLLUP_COUNTS} | {
         "duration_secs": round(dur, 3),
         # no throughput from a run that emitted no triples itself
         "triples_per_sec": (
@@ -313,16 +451,13 @@ def run_pipeline(
     # error table is vocabulary-sized (distinct invalid URNs / types;
     # broken refs are empty by construction here) — cap the collect so an
     # adversarial input can't flood the driver; the report renders counts
-    # + first-N samples, matching the reference's truncation.
-    ebt = {
-        r["type"]: r["n"]
-        for r in store.read("graph_nodes")
-        .groupBy("type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    save_metrics_reports(out_dir, metrics, ebt)
-    save_validation_reports(
-        out_dir, errors.limit(100_000).toPandas()[ERROR_COLS]
+    # + first-N samples, matching the reference's truncation.  With no
+    # errors stored there is nothing to collect.
+    save_metrics_reports(out_dir, metrics, mat["ebt"])
+    errors = (
+        store.read("validation_errors").limit(100_000).toPandas()[ERROR_COLS]
+        if metrics["validation_errors"]
+        else pd.DataFrame(columns=ERROR_COLS)
     )
+    save_validation_reports(out_dir, errors)
     return metrics

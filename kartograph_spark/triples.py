@@ -26,7 +26,7 @@ from __future__ import annotations
 
 import re as _re
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from kartograph_spark.rules import _URN_ENCODE_CHAIN
@@ -145,7 +145,9 @@ def mention_triples(mentions: DataFrame) -> DataFrame:
     )
 
 
-def conversation_triples(transcripts: DataFrame) -> DataFrame:
+def conversation_triples(
+    transcripts: DataFrame, corpus: Observation | None = None
+) -> DataFrame:
     """Per-conversation entity record with typed scalar literals.
 
     Gives the triple set dtype diversity matching the reference's literal
@@ -154,6 +156,11 @@ def conversation_triples(transcripts: DataFrame) -> DataFrame:
     Single map-side-combinable aggregation, then ONE explode of a 6-struct
     array — not a 6-way union (which re-evaluates the corpus aggregation
     once per branch).
+
+    ``corpus``, if given, observes the whole-corpus counts on the
+    one-row-per-conversation aggregate: ``conversations`` (its rows) and
+    ``turns`` (the sum of its per-conversation row counts, i.e. the rows
+    of its input) — exact, and free on the job that runs the aggregate.
     """
     agg = transcripts.groupBy("conv_id").agg(
         F.count(F.lit(1)).alias("turn_count"),
@@ -162,6 +169,12 @@ def conversation_triples(transcripts: DataFrame) -> DataFrame:
         F.max("ts").alias("max_ts"),
         F.max(F.col("tool").isNotNull()).alias("has_tool"),
     )
+    if corpus is not None:
+        agg = agg.observe(
+            corpus,
+            F.coalesce(F.sum("turn_count"), F.lit(0)).alias("turns"),
+            F.count(F.lit(1)).alias("conversations"),
+        )
 
     def trip(pred: str, obj: Column, dtype: str) -> Column:
         return F.struct(

@@ -7,6 +7,13 @@ from kartograph_spark.extraction.core import extract_mentions_block
 from kartograph_spark.extraction.mentions import extract_mentions
 
 
+def _nulls_as_none(df):
+    """Every null cell of an object column as None: Spark's toPandas and
+    the pandas core spell a missing string differently (None vs NaN), and
+    assert_frame_equal is to compare values, not that spelling."""
+    return df.where(df.notna(), None)
+
+
 def _turns(*texts):
     return pd.DataFrame(
         {
@@ -233,7 +240,8 @@ def test_spark_matches_pandas_core(spark, transcripts_df, transcripts_pdf):
         .reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(
-        got.astype({"turn_idx": "int64"}), exp.astype({"turn_idx": "int64"})
+        _nulls_as_none(got.astype({"turn_idx": "int64"})),
+        _nulls_as_none(exp.astype({"turn_idx": "int64"})),
     )
 
 
@@ -617,7 +625,7 @@ def test_native_matches_pandas_on_unicode_whitespace(spark):
         .reset_index(drop=True)
     )
     exp = extract_mentions_block(pdf).sort_values(key).reset_index(drop=True)
-    pd.testing.assert_frame_equal(got, exp)
+    pd.testing.assert_frame_equal(_nulls_as_none(got), _nulls_as_none(exp))
     # the boundary cases really are in the expected rows
     assert "urn:CodeRepository:https://git.example.com/a" in set(exp["urn"])
     assert "urn:CodeRepository:https://x.io/b" in set(exp["urn"])

@@ -14,8 +14,9 @@ import tempfile
 import pandas as pd
 import pytest
 
-from kartograph_spark import pipeline
+from kartograph_spark import pipeline, rules
 from kartograph_spark.config import PipelineConfig
+from kartograph_spark.extraction import mentions
 from kartograph_spark.graph import TableStore
 from kartograph_spark.lineage import (
     completed_partitions,
@@ -125,9 +126,7 @@ def test_resume_skips_completed_and_is_idempotent(spark, transcripts_df):
     lost = {1, 4, 6}
     assert lost <= set(files1)
     survivors = {b: n for b, n in manifest["rows"].items() if int(b) not in lost}
-    write_stage_marker(
-        out, "mentions", {"config_hash": cfg.config_hash, "rows": survivors}
-    )
+    write_stage_marker(out, "mentions", {**manifest, "rows": survivors})
     assert completed_partitions(out, "mentions", cfg.config_hash) == (
         set(range(8)) - lost
     )
@@ -143,8 +142,8 @@ def test_resume_skips_completed_and_is_idempotent(spark, transcripts_df):
 
 
 def test_config_hash_invalidation(spark, transcripts_df):
-    cfg_a = PipelineConfig(n_buckets=8, rules_version="1")
-    cfg_b = PipelineConfig(n_buckets=8, rules_version="2")
+    cfg_a = PipelineConfig(n_buckets=8, salt_turns=1024)
+    cfg_b = PipelineConfig(n_buckets=8, salt_turns=512)
     assert cfg_a.config_hash != cfg_b.config_hash
     out = tempfile.mkdtemp(prefix="kg-cfg-")
     store = TableStore(spark, out)
@@ -154,6 +153,18 @@ def test_config_hash_invalidation(spark, transcripts_df):
     assert completed_partitions(out, "mentions", cfg_a.config_hash) == set(
         range(8)
     )
+
+
+def test_rule_edit_changes_config_hash(monkeypatch):
+    """The config hash covers the rule text: editing one pattern (with
+    no version to bump) gives a new hash, so resume recomputes."""
+    before = PipelineConfig().config_hash
+    assert mentions.rules_digest() == mentions.RULES_DIGEST
+    monkeypatch.setattr(rules, "EMAIL_RE", rules.EMAIL_RE.replace("{2,}", "{3,}"))
+    # the digest is computed once at import; recompute it as a new
+    # process with the edited rule would
+    monkeypatch.setattr(mentions, "RULES_DIGEST", mentions.rules_digest())
+    assert PipelineConfig().config_hash != before
 
 
 def test_full_pipeline_resume_mid_triples(spark, transcripts_df, alias_df):

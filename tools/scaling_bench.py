@@ -146,6 +146,12 @@ def render_baseline_md() -> None:
         "the memory-note ceilings below) — treat any single efficiency",
         "number as a draw from that spread.",
         "",
+        "Reproducibility: the pairs below were measured on a 32-vCPU VM.",
+        "A pair needs at least as many cores as its larger side: on a",
+        "4-core host local[8] oversubscribes the cores, so the 2 -> 8 pair",
+        "(and 8 -> 32) cannot be reproduced there — its efficiency would",
+        "measure the host, not the pipeline.",
+        "",
     ]
     for s in pairs:
         small, large = s["small_cores"], s["large_cores"]
