@@ -1,14 +1,21 @@
 """Canonicalization: type normalization + coreference rewrite (M4).
 
 Operators A1/A2/A3, J4/J6 and the connected-components closure
-(SURVEY.md §2.5-2.6).  All dictionary-shaped joins are explicit
-``broadcast()`` hash joins — the rewrite maps are entity-vocabulary-sized,
-never corpus-sized, so the mention table is never shuffled here.
+(SURVEY.md §2.5-2.6).  Every step stays in Spark plans; the driver only
+sees the observed-type histogram and the coreference pairs.
+
+- The type map (A3) is a literal ``create_map`` looked up per row: the
+  distinct-type set is tiny by contract (hundreds even at 10^12 turns),
+  so the map is a few bytes of plan and costs no join and no job.
+- The URN rewrite maps (the canonical map, the dictionary metadata) are
+  entity-vocabulary-sized: too large to inline as literals, so they are
+  explicit ``broadcast()`` hash joins.  They are never corpus-sized, so
+  the mention table is never shuffled here.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kartograph_spark import rules
@@ -16,66 +23,54 @@ from kartograph_spark.components import canonical_map
 from kartograph_spark.linking import alias_norm_col
 
 
-def build_type_normalization(mentions: DataFrame) -> DataFrame:
-    """Observed-type histogram -> (entity_type, canonical_type) map.
+def build_type_normalization(mentions: DataFrame) -> dict[str, str]:
+    """Observed-type histogram -> {entity_type: canonical_type}.
 
     A3 aggregation (agent_deduplicator.py:273-285); the distinct-type set
     is tiny even at 10^12 turns, so the deterministic rule
-    (rules.build_type_norm_map) runs on collected counts and the result is
-    broadcast back (J6).
-    """
+    (rules.build_type_norm_map) runs on the collected counts."""
     counts = mentions.groupBy("entity_type").agg(F.count(F.lit(1)).alias("n"))
     pdf = counts.toPandas()
-    norm = rules.build_type_norm_map(pdf) if len(pdf) else {}
-    spark = mentions.sparkSession
-    if not norm:
-        return spark.createDataFrame([], "entity_type string, canonical_type string")
-    return spark.createDataFrame(
-        list(norm.items()), "entity_type string, canonical_type string"
-    )
+    return rules.build_type_norm_map(pdf) if len(pdf) else {}
 
 
-def apply_type_normalization(mentions: DataFrame, norm: DataFrame) -> DataFrame:
-    """Rewrite entity_type and the URN type segment (J6,
-    agent_deduplicator.py:322: prefix rewrite keeps the identifier).
+def _retyped(urn: Column, canonical_type: Column) -> Column:
+    """``urn:<canonical_type>:<identifier>`` where ``canonical_type`` is
+    set, else ``urn`` unchanged (J6 prefix rewrite keeps the identifier,
+    agent_deduplicator.py:322)."""
+    return F.when(
+        canonical_type.isNotNull(),
+        F.concat(
+            F.lit("urn:"),
+            canonical_type,
+            F.lit(":"),
+            F.regexp_replace(urn, r"^urn:[^:]*:", ""),
+        ),
+    ).otherwise(urn)
+
+
+def apply_type_normalization(mentions: DataFrame, norm: dict[str, str]) -> DataFrame:
+    """Rewrite entity_type and the URN type segment with the type map
+    (J6), looked up in one literal map.
 
     ``subj_urn`` anchors (verb-mention subjects) carry their own embedded
     type segment and are rewritten with the same map — the anchor must
     stay identical to the URN its E1 mention row normalizes to."""
-    out = mentions.join(F.broadcast(norm), "entity_type", "left")
-    new_type = F.coalesce(F.col("canonical_type"), F.col("entity_type"))
-    new_urn = F.when(
-        F.col("canonical_type").isNotNull(),
-        F.concat(
-            F.lit("urn:"),
-            F.col("canonical_type"),
-            F.lit(":"),
-            F.regexp_replace(F.col("urn"), r"^urn:[^:]*:", ""),
-        ),
-    ).otherwise(F.col("urn"))
-    out = out.withColumn("entity_type", new_type).withColumn(
-        "urn", new_urn
-    ).drop("canonical_type")
-
+    lookup = F.create_map(*(F.lit(s) for kv in sorted(norm.items()) for s in kv))
+    canon = F.try_element_at(lookup, F.col("entity_type"))
+    out = mentions.withColumns(
+        {
+            "entity_type": F.coalesce(canon, F.col("entity_type")),
+            "urn": _retyped(F.col("urn"), canon),
+        }
+    )
     if "subj_urn" not in out.columns:
         return out
-    subj_norm = norm.select(
-        F.col("entity_type").alias("_subj_type"),
-        F.col("canonical_type").alias("_subj_canon"),
+    subj_type = F.regexp_extract("subj_urn", r"^urn:([^:]+):", 1)
+    return out.withColumn(
+        "subj_urn",
+        _retyped(F.col("subj_urn"), F.try_element_at(lookup, subj_type)),
     )
-    out = out.withColumn(
-        "_subj_type", F.regexp_extract("subj_urn", r"^urn:([^:]+):", 1)
-    ).join(F.broadcast(subj_norm), "_subj_type", "left")
-    new_subj = F.when(
-        F.col("_subj_canon").isNotNull(),
-        F.concat(
-            F.lit("urn:"),
-            F.col("_subj_canon"),
-            F.lit(":"),
-            F.regexp_replace(F.col("subj_urn"), r"^urn:[^:]*:", ""),
-        ),
-    ).otherwise(F.col("subj_urn"))
-    return out.withColumn("subj_urn", new_subj).drop("_subj_type", "_subj_canon")
 
 
 def coreference_pairs(
@@ -161,26 +156,20 @@ def canonicalize_mentions(
 
     Returns (canonical mentions, canonical_map).  After the URN rewrite the
     canonical entity inherits the dictionary's display name/type where a
-    dictionary canonical won (J4 coalesce,
-    agent_deduplicator.py:344-378)."""
-    spark = mentions.sparkSession
-    norm = build_type_normalization(mentions)
-    # typed is NOT persisted: it is a map-side broadcast join over the
+    dictionary canonical won (J4 coalesce, agent_deduplicator.py:344-378):
+    the per-``canonical_urn`` minimum of ``entity_type`` and of
+    ``canonical_name``, one vocabulary-sized aggregate whose ``urn``
+    column is also the preferred-representative set."""
+    # typed is NOT persisted: it is a per-row map lookup over the
     # (persisted) mention frame, so recomputing it for pair generation and
     # for the final rewrite is cheaper than a corpus-sized cache write
-    typed = apply_type_normalization(mentions, norm)
-
-    # The alias dictionary is entity-vocabulary-sized by contract (it is
-    # what gets broadcast) — collect it ONCE and derive the preferred set
-    # and dictionary metadata locally, instead of three separate scan /
-    # collect jobs whose scheduling latency is pure Amdahl overhead.
-    alias_pdf = alias_dict.toPandas()
-    # explicit schema: an empty dictionary (or an all-null column) cannot
-    # be inferred from the pandas frame and would raise at createDataFrame
-    alias_local = spark.createDataFrame(alias_pdf, schema=alias_dict.schema)
-
-    pairs = coreference_pairs(typed, alias_local, confidence_threshold)
-    cmap = canonical_map(pairs, preferred=set(alias_pdf["canonical_urn"]))
+    typed = apply_type_normalization(mentions, build_type_normalization(mentions))
+    dict_meta = alias_dict.groupBy(F.col("canonical_urn").alias("urn")).agg(
+        F.min("entity_type").alias("_dict_type"),
+        F.min("canonical_name").alias("_dict_name"),
+    )
+    pairs = coreference_pairs(typed, alias_dict, confidence_threshold)
+    cmap = canonical_map(pairs, preferred=dict_meta.select("urn"))
 
     rewritten = (
         typed.withColumnRenamed("urn", "member_urn")
@@ -203,29 +192,18 @@ def canonicalize_mentions(
         )
 
     # Dictionary metadata wins for canonical entities: overwrite
-    # entity_type/name where urn is a dictionary canonical.  Aggregated
-    # locally on the already-collected dictionary (no extra scan job).
-    meta_pdf = (
-        alias_pdf.groupby("canonical_urn")
-        .agg(
-            _dict_type=("entity_type", "min"),
-            _dict_name=("canonical_name", "min"),
-        )
-        .reset_index()
-        .rename(columns={"canonical_urn": "urn"})
-    )
-    meta_schema = "urn string, _dict_type string, _dict_name string"
-    dict_meta = (
-        spark.createDataFrame(meta_pdf[["urn", "_dict_type", "_dict_name"]])
-        if len(meta_pdf)
-        else spark.createDataFrame([], meta_schema)
-    )
+    # entity_type/name where urn is a dictionary canonical.  The stored
+    # column order puts the rewritten keys first (urn, subj_urn,
+    # entity_type); the other mention columns keep their input order.
+    lead = [c for c in ("urn", "subj_urn", "entity_type") if c in rewritten.columns]
     final = (
         rewritten.join(F.broadcast(dict_meta), "urn", "left")
-        .withColumn(
-            "entity_type", F.coalesce(F.col("_dict_type"), F.col("entity_type"))
+        .withColumns(
+            {
+                "entity_type": F.coalesce(F.col("_dict_type"), F.col("entity_type")),
+                "name": F.coalesce(F.col("_dict_name"), F.col("name")),
+            }
         )
-        .withColumn("name", F.coalesce(F.col("_dict_name"), F.col("name")))
-        .drop("_dict_type", "_dict_name")
+        .select(*lead, *(c for c in rewritten.columns if c not in lead))
     )
     return final, cmap

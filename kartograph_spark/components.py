@@ -391,7 +391,11 @@ def two_hop_reach_capped_exact(
     instead of HLL — deterministic and SQL-expressible, so the driver
     oracle hash-checks the cap semantics that two_hop_reach_approx
     applies under HLL.  Nodes routing through a capped hub report the
-    same one-sided lower bound as the approx form."""
+    same one-sided lower bound as the approx form.
+
+    Building the plan is not lazy: the hub cap (``_capped_mid``) runs an
+    eager max-degree job and persists the symmetric edges and the hub
+    degrees (released by ``release_caches``)."""
     sym = _track(symmetric_edges(pairs))
     mid = _capped_mid(sym, hub_cap)
     two = (
@@ -433,6 +437,10 @@ def two_hop_reach_approx(
     Exactness: with ``hub_cap`` >= the max degree the capped expansion is
     the full wedge set and the only error is HLL's (±rsd); the pytest
     pins both regimes against ``two_hop_reach_exact`` on the synth KG.
+
+    Building the plan is not lazy: the hub cap (``_capped_mid``) runs an
+    eager max-degree job and persists the symmetric edges and the hub
+    degrees (released by ``release_caches``).
     """
     sym = _track(symmetric_edges(pairs))
     mid = _capped_mid(sym, hub_cap)
@@ -452,22 +460,23 @@ def two_hop_reach_approx(
 
 def canonical_map(
     pairs: DataFrame,
-    preferred: DataFrame | set | None = None,
+    preferred: DataFrame | None = None,
     max_driver_edges: int | None = None,
 ) -> DataFrame:
     """Coreference pairs -> rewrite map (member_urn, canonical_urn).
 
     The representative of each component is the minimum URN, except that
     URNs present in ``preferred`` (a one-column ``urn`` DataFrame of alias-
-    dictionary canonicals) win first — mirroring the reference's
+    dictionary canonicals, or None) win first — mirroring the reference's
     primary_urn taking precedence inside a duplicate group
     (agent_deduplicator.py:344-378).  Identity rows are filtered out, so
     the result is small (only actually-merged entities) and broadcastable.
 
     Fast path: when the pair set fits in the driver (entity-vocabulary-
     sized — the normal case even at 10^12 turns) the whole map is computed
-    in 2 jobs (edges collect + preferred collect); the distributed path
-    with the reps groupBy/join remains for adversarial pair sets.
+    from the collected edges plus, when there are any, the collected
+    ``preferred`` column (dictionary-vocabulary-sized); the distributed
+    path with the reps groupBy/join remains for adversarial pair sets.
     """
     cap = DRIVER_UNION_FIND_MAX if max_driver_edges is None else max_driver_edges
     small = _collect_if_small(pairs, cap)
@@ -480,12 +489,7 @@ def canonical_map(
                 [], "member_urn string, canonical_urn string"
             )
         parent = _union_find(small)
-        if preferred is None:
-            pref: set = set()
-        elif isinstance(preferred, set):
-            pref = preferred
-        else:
-            pref = {r["urn"] for r in preferred.collect()}
+        pref = set() if preferred is None else {r["urn"] for r in preferred.collect()}
         comp: dict[str, list[str]] = {}
         for m in parent:
             comp.setdefault(_uf_find(parent, m), []).append(m)
@@ -501,10 +505,6 @@ def canonical_map(
     labels = connected_components(
         pairs, max_driver_edges=max_driver_edges, _assume_large=True
     )
-    if isinstance(preferred, set):
-        preferred = pairs.sparkSession.createDataFrame(
-            [(u,) for u in sorted(preferred)], "urn string"
-        )
     if preferred is not None:
         pref = preferred.select(F.col("urn").alias("member"), F.lit(0).alias("tier"))
         labels = labels.join(F.broadcast(pref), "member", "left").withColumn(

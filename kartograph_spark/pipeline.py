@@ -237,7 +237,12 @@ def build_triples(
 ) -> tuple[DataFrame, DataFrame]:
     """Pure transformation composition (no store): returns (kept_triples,
     broken_ref_report).  Used by in-memory callers (__spark_entry__,
-    bench); run_pipeline shares its triples_chain."""
+    bench); run_pipeline shares its triples_chain.
+
+    The caller owns the caches this call persists (the extracted
+    mentions, unless ``mentions`` is given, and the deduped triples both
+    results read): release them with ``spark.catalog.clearCache()`` after
+    the last action on the results."""
     cfg = cfg or PipelineConfig()
     if mentions is None:
         # persist: the mention frame feeds type-norm, pair generation and
@@ -252,19 +257,20 @@ def build_triples(
     canonical, _cmap = canonicalize_mentions(
         mentions, alias_dict, cfg.confidence_threshold
     )
-    kept, broken, _corpus = triples_chain(canonical, transcripts)
+    kept, broken, _corpus, _deduped = triples_chain(canonical, transcripts)
     return kept, broken
 
 
 def triples_chain(
     canonical: DataFrame, transcripts: DataFrame
-) -> tuple[DataFrame, DataFrame, dict]:
-    """Canonical mentions -> (kept_triples, broken_ref_report, corpus):
-    emission, first-occurrence dedup, uid>scalar resolution, encode,
-    broken-ref split.  ``corpus`` holds the whole-corpus ``turns`` and
-    ``conversations`` counts, observed on the conversation aggregate.
-    The one copy of the chain, shared by build_triples and the
-    run_pipeline triples stage."""
+) -> tuple[DataFrame, DataFrame, dict, DataFrame]:
+    """Canonical mentions -> (kept_triples, broken_ref_report, corpus,
+    deduped): emission, first-occurrence dedup, uid>scalar resolution,
+    encode, broken-ref split.  ``corpus`` holds the whole-corpus ``turns``
+    and ``conversations`` counts, observed on the conversation aggregate.
+    ``deduped`` is the persisted cache both results read; the caller
+    unpersists it after its last action on them.  The one copy of the
+    chain, shared by build_triples and the run_pipeline triples stage."""
     # unnamed: a fresh name per call, so the persisted plan below never
     # matches an earlier call's cache, whose node would not report here
     corpus = Observation()
@@ -286,7 +292,7 @@ def triples_chain(
     corpus_counts = observed(corpus)
     resolved = tr.apply_uid_resolution(deduped, uid_preds)
     kept, broken = val.split_broken_refs(tr.encode_final(resolved))
-    return kept, broken, corpus_counts
+    return kept, broken, corpus_counts, deduped
 
 
 def run_stage(
@@ -367,14 +373,14 @@ def run_pipeline(
     canonical = store.read("canonical_mentions")
 
     def triples_stage():
-        kept, broken, corpus = triples_chain(canonical, transcripts)
-        return {
-            "counts": {
-                **corpus,
-                **write_counted(store, kept, "triples", ["pred"], triples=rows()),
-                **write_counted(store, broken, "broken_refs", broken_refs=rows()),
-            }
+        kept, broken, corpus, deduped = triples_chain(canonical, transcripts)
+        counts = {
+            **corpus,
+            **write_counted(store, kept, "triples", ["pred"], triples=rows()),
+            **write_counted(store, broken, "broken_refs", broken_refs=rows()),
         }
+        deduped.unpersist()  # the materialize stage reads the written table
+        return {"counts": counts}
 
     trip, ran = run_stage(store, "triples", cfg, triples_stage)
     if not ran:
@@ -393,7 +399,9 @@ def run_pipeline(
             validation_errors=rows(),
             orphans=F.count_if(F.col("message").startswith("orphan")),
         )
-        store.write(val.validation_summary(errors), "validation_summary")
+        # from the written table: the errors plan would re-run its scans
+        summary = val.validation_summary(store.read("validation_errors"))
+        store.write(summary, "validation_summary")
         counts |= write_counted(
             store, val.review_flags(canonical), "review_flags", review_flags=rows()
         )

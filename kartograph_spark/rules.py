@@ -504,7 +504,7 @@ def build_type_norm_map(type_counts: pd.DataFrame) -> dict[str, str]:
     if no variant is valid PascalCase, capitalize the first letter of the
     lexicographically-smallest candidate.  Driver-side: the distinct-type
     set is tiny (hundreds) even at 10^12 turns, so this map is built on
-    collected counts and broadcast back (SURVEY.md §2.6).
+    collected counts and applied as a literal map lookup (SURVEY.md §2.6).
 
     ``type_counts`` columns: entity_type (str), n (int).
     Returns {observed_type -> canonical_type}, identity entries omitted.

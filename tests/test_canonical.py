@@ -153,3 +153,64 @@ def test_coreference_pairs_single_scan_equivalence(spark):
     )
     new = set(map(tuple, coreference_pairs(m, al, 0.85).collect()))
     assert old == new and len(new) == 12
+
+
+ALIAS_SCHEMA = (
+    "alias_norm string, canonical_urn string, entity_type string,"
+    " canonical_name string"
+)
+
+
+def test_dictionary_metadata_takes_the_minimum(spark):
+    """One canonical_urn with two alias rows that differ in entity_type
+    and canonical_name: the merged entity takes the minimum of each,
+    independently (the minimum type and name come from different rows)."""
+    al = spark.createDataFrame(
+        [
+            ("payments", "urn:Service:pay", "Service", "Alpha Pay"),
+            ("pay svc", "urn:Service:pay", "Application", "Zeta Pay"),
+        ],
+        ALIAS_SCHEMA,
+    )
+    mentions = _mentions_df(
+        spark,
+        [{"urn": "urn:Tool:payments", "kind": "uses", "name": "Payments",
+          "entity_type": "Tool"}],
+    )
+    canon, cmap = canonicalize_mentions(mentions, al)
+    row = canon.collect()[0]
+    assert row["urn"] == "urn:Service:pay"
+    assert row["entity_type"] == "Application"
+    assert row["name"] == "Alpha Pay"
+    assert [tuple(r) for r in cmap.collect()] == [
+        ("urn:Tool:payments", "urn:Service:pay")
+    ]
+
+
+def test_subj_urn_type_segment_is_normalized(spark):
+    """A verb mention's subj_urn anchor with a type variant
+    (``urn:services:x``, Service dominant) is rewritten to the URN its E1
+    mention normalizes to; an unmatched type segment, an empty segment
+    and a null anchor stay unchanged."""
+    e1 = {"kind": "urn", "kind_rank": 0, "pred": None}
+    mentions = _mentions_df(
+        spark,
+        [
+            {**e1, "urn": "urn:services:x", "entity_type": "services", "name": "x"},
+            {**e1, "urn": "urn:Service:a", "entity_type": "Service", "name": "a"},
+            {**e1, "urn": "urn:Service:b", "entity_type": "Service", "name": "b"},
+            {"urn": "urn:Tool:t1", "name": "t1", "subj_urn": "urn:services:x"},
+            {"urn": "urn:Tool:t2", "name": "t2", "subj_urn": "urn:Widget:y"},
+            {"urn": "urn:Tool:t3", "name": "t3", "subj_urn": "urn::z"},
+            {"urn": "urn:Tool:t4", "name": "t4", "subj_urn": None},
+        ],
+    )
+    al = spark.createDataFrame([], ALIAS_SCHEMA)
+    canon, _ = canonicalize_mentions(mentions, al)
+    by_name = {r["name"]: r for r in canon.collect()}
+    assert by_name["x"]["urn"] == "urn:Service:x"
+    assert by_name["x"]["entity_type"] == "Service"
+    assert by_name["t1"]["subj_urn"] == by_name["x"]["urn"]
+    assert by_name["t2"]["subj_urn"] == "urn:Widget:y"
+    assert by_name["t3"]["subj_urn"] == "urn::z"
+    assert by_name["t4"]["subj_urn"] is None

@@ -79,16 +79,35 @@ def _stored_store(spark, out):
     return store
 
 
+#: jobs of a fresh build of the e2e fixture: a driver round trip that
+#: comes back (a collect, an extra broadcast scan) shows up here
+FRESH_BUILD_JOBS = 56
+
+
 def test_job_budget(spark, transcripts_df, alias_df, built, schemaless_reads):
     """A fresh build reads no table without its schema (so launches no
-    inference job); a no-op re-run launches at most 3 jobs."""
+    inference job) and runs its pinned number of jobs; a no-op re-run
+    launches at most 3 jobs."""
     out = tempfile.mkdtemp(prefix="kg-budget-")
     run_pipeline(spark, transcripts_df, alias_df, out, CFG)
     assert not [p for p in schemaless_reads if p.startswith(out)]
     _, fresh, fresh_jobs, noop, noop_jobs = built
     assert noop["skipped_stages"] == list(STAGE_TABLES)
     assert noop_jobs <= 3, noop_jobs
-    assert fresh_jobs > noop_jobs  # the group does count the build's jobs
+    assert fresh_jobs == FRESH_BUILD_JOBS, fresh_jobs
+
+
+def test_run_pipeline_leaves_no_cache(spark, transcripts_df, alias_df):
+    """A build unpersists what it persisted: the session holds as many
+    persisted RDDs after a ``run_pipeline`` call as before it."""
+
+    def persisted():  # each getPersistentRDDs call returns a snapshot
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    before = persisted()
+    out = tempfile.mkdtemp(prefix="kg-cache-")
+    run_pipeline(spark, transcripts_df, alias_df, out, CFG)
+    assert persisted() == before
 
 
 def test_resume_reports_the_fresh_counts(
