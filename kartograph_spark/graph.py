@@ -7,13 +7,14 @@ Outputs:
 - ``graph_edges(subj, pred, obj, conv_id, turn_idx)`` partitioned by
   ``pred`` (the Iceberg-partitioning analog of Dgraph's per-predicate
   indexes, load_dgraph.py:229-265).
-- schema manifest — per-predicate resolved dtype with uid>string
-  precedence (load_dgraph.py:86-206), derived as an aggregation (A6).
+- schema manifest + per-type predicate lists — per-predicate resolved
+  dtype with uid>string precedence (load_dgraph.py:86-206, 219-227).
 
-Table format: Iceberg when the runtime is on the classpath, else
-partitioned parquet with identical layout (TableStore below) — the write
-API is format-agnostic so a real cluster flips one config.  A table is
-read back with the schema recorded at its write, so a read launches no
+One aggregate per output: the node table is one ``groupBy(subj)``, and
+both schema artifacts are driver functions of one collected summary.
+
+Table format: partitioned parquet (TableStore below).  A table is read
+back with the schema recorded at its write, so a read launches no
 schema-inference job (and an empty table, which has no footer to infer
 from, reads as zero rows).
 """
@@ -22,20 +23,13 @@ from __future__ import annotations
 
 import json
 import os
+from collections import Counter, defaultdict
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kartograph_spark import rules
-
-
-def _iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.org.apache.iceberg.spark.SparkCatalog  # noqa: SLF001
-        return True
-    except Exception:
-        return False
 
 
 def _as_nullable(dt: T.DataType) -> T.DataType:
@@ -70,11 +64,8 @@ def read_back_schema(
 
 
 class TableStore:
-    """Minimal table-format abstraction: Iceberg if present, else parquet.
-
-    On a real cluster with an Iceberg catalog configured, writes become
-    ``writeTo(...).createOrReplace()`` against the catalog; in this sandbox
-    (no Iceberg jars) identical partitioned parquet layout is used.
+    """Named tables under ``root``: each write is a partitioned parquet
+    overwrite, each read uses the schema stored at the write.
 
     ``schemas`` holds the read-back schema of every table this store wrote
     or was told about (``pipeline.run_stage`` loads a skipped stage's from
@@ -86,7 +77,6 @@ class TableStore:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self.iceberg = _iceberg_available(spark)
         self.schemas: dict[str, dict] = {}
 
     def path(self, name: str) -> str:
@@ -105,53 +95,46 @@ class TableStore:
 
 
 def build_nodes(triples: DataFrame, strategy: str = "first") -> DataFrame:
-    """Node table from dgraph.type / name triples.
+    """Node table from dgraph.type / name / description triples.
 
     ``strategy`` mirrors the reference's urn_merge_strategy
     (urn_deduplicator.py:80-90): 'first' keeps the earliest record's
     attributes under stable (conv_id, turn_idx) order, 'last' the
     latest.  (The 'merge_predicates' strategy is the triple table itself
     — union of distinct (pred, obj) per subject, operator A2.)
-    Single map-side-combinable aggregation either way.
+
+    One map-side-combinable ``groupBy(subj)``: each attribute is a pick
+    over a struct that is NULL on the other predicates' rows, and
+    ``min``/``max`` skip NULLs.  A subject without a type triple is not a
+    node (a name or description alone defines none).
     """
     if strategy not in ("first", "last"):
         raise ValueError(f"unknown dedup strategy: {strategy}")
     pick = F.min if strategy == "first" else F.max
-    types = triples.filter(F.col("pred") == rules.DGRAPH_TYPE_PRED).select(
-        F.col("subj").alias("urn"),
-        F.col("obj").alias("type"),
-        "conv_id",
-        "turn_idx",
-    )
-    names = triples.filter(F.col("pred") == "name").select(
-        F.col("subj").alias("urn"),
-        F.col("obj").alias("name"),
-        "conv_id",
-        "turn_idx",
-    )
-    # description: "use non-None description if available" scanning records
-    # in order (urn_deduplicator.py:124-127) == the LAST non-None one.
-    # None descriptions never become triples, so max over description
-    # triples in stable order is exactly that merge; first/last record
-    # strategies coincide with the pick on the triples that exist.
-    descs = triples.filter(F.col("pred") == "description").select(
-        F.col("subj").alias("urn"),
-        F.col("obj").alias("description"),
-        "conv_id",
-        "turn_idx",
-    )
-    first_type = types.groupBy("urn").agg(
-        pick(F.struct("conv_id", "turn_idx", "type")).alias("t")
-    )
-    first_name = names.groupBy("urn").agg(
-        pick(F.struct("conv_id", "turn_idx", "name")).alias("n")
-    )
-    last_desc = descs.groupBy("urn").agg(
-        F.max(F.struct("conv_id", "turn_idx", "description")).alias("d")
-    )
+
+    def attr(pred: str, name: str, agg=pick):
+        return agg(
+            F.when(
+                F.col("pred") == pred,
+                F.struct("conv_id", "turn_idx", F.col("obj").alias(name)),
+            )
+        )
+
     return (
-        first_type.join(first_name, "urn", "left")
-        .join(last_desc, "urn", "left")
+        triples.filter(
+            F.col("pred").isin(rules.DGRAPH_TYPE_PRED, "name", "description")
+        )
+        .groupBy(F.col("subj").alias("urn"))
+        .agg(
+            attr(rules.DGRAPH_TYPE_PRED, "type").alias("t"),
+            attr("name", "name").alias("n"),
+            # description: "use non-None description if available" scanning
+            # records in order (urn_deduplicator.py:124-127) == the LAST
+            # non-None one.  None descriptions never become triples, so max
+            # in stable order is exactly that merge, whatever the strategy.
+            attr("description", "description", F.max).alias("d"),
+        )
+        .filter(F.col("t").isNotNull())
         .select(
             "urn",
             F.col("t.type").alias("type"),
@@ -190,67 +173,73 @@ def _index_tokens(predicate: str, resolved: str) -> list[str]:
     return []
 
 
-def infer_schema_manifest(triples: DataFrame) -> list[dict]:
-    """Per-predicate dtype resolution (load_dgraph.py:86-206):
-    any uid observation -> uid; mixed scalars -> string; else the single
-    observed scalar type.  Also records per-predicate triple counts and
-    the reference's index selection (load_dgraph.py:229-265)."""
-    agg = (
-        triples.groupBy("pred")
-        .agg(
-            F.sort_array(F.collect_set("dtype")).alias("observed"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .orderBy("pred")
+def schema_summary(triples: DataFrame) -> list[Row]:
+    """The one collect behind both schema artifacts: triple ``count`` per
+    (``pred``, ``dtype``, ``types``), ``types`` being the sorted type array
+    of the triple's subject (NULL if untyped); vocabulary-sized rows.
+    Grouping by the whole type array, not by each type, keeps both
+    artifacts exact for a subject with several dgraph.type triples: each
+    triple counts once for the manifest, and its predicate is listed
+    under every one of the subject's types."""
+    types = (
+        triples.filter(F.col("pred") == rules.DGRAPH_TYPE_PRED)
+        .groupBy("subj")
+        .agg(F.sort_array(F.collect_set("obj")).alias("types"))
     )
+    return (
+        triples.join(types, "subj", "left")
+        .groupBy("pred", "dtype", "types")
+        .count()
+        .collect()
+    )
+
+
+def infer_schema_manifest(summary: list[Row]) -> list[dict]:
+    """Per-predicate dtype resolution (load_dgraph.py:86-206) from
+    ``schema_summary`` rows: any uid observation -> uid; mixed scalars ->
+    string; else the single observed scalar type.  Also records
+    per-predicate triple counts and the reference's index selection
+    (load_dgraph.py:229-265)."""
+    observed: dict[str, set[str]] = defaultdict(set)
+    counts: Counter[str] = Counter()
+    for r in summary:
+        observed[r["pred"]].add(r["dtype"])
+        counts[r["pred"]] += r["count"]
     out = []
-    for r in agg.collect():
-        observed = list(r["observed"])
-        if "uid" in observed:
+    for pred in sorted(counts):
+        types = sorted(observed[pred])
+        if "uid" in types:
             resolved = "uid"
-        elif len(observed) == 1:
-            resolved = observed[0]
+        elif len(types) == 1:
+            resolved = types[0]
         else:
             resolved = "string"
         out.append(
             {
-                "predicate": r["pred"],
-                "observed_types": observed,
+                "predicate": pred,
+                "observed_types": types,
                 "resolved_type": resolved,
-                "count": r["n"],
+                "count": counts[pred],
                 "reverse": resolved == "uid",  # @reverse on uid preds (load_dgraph.py:244)
-                "index": _index_tokens(r["pred"], resolved),
+                "index": _index_tokens(pred, resolved),
             }
         )
     return out
 
 
-def infer_type_predicates(triples: DataFrame) -> list[dict]:
+def infer_type_predicates(summary: list[Row]) -> list[dict]:
     """Sparse per-entity-type predicate lists (load_dgraph.py:114-118,
-    219-227): for each entity type, the sorted set of predicates observed
-    on subjects of that type — the reference's ``type X { pred... }``
-    blocks.  ``dgraph.type`` itself is excluded, mirroring the reference
-    skipping the @type key in its per-entity predicate loop.
-
-    Two vocabulary-sized aggregations + one broadcastable join: the type
-    map (subj -> type) is entity-vocabulary-sized even at 10^12 turns.
-    """
-    types = (
-        triples.filter(F.col("pred") == rules.DGRAPH_TYPE_PRED)
-        .select("subj", F.col("obj").alias("type"))
-        .distinct()
-    )
-    agg = (
-        triples.filter(F.col("pred") != rules.DGRAPH_TYPE_PRED)
-        .join(types, "subj")
-        .groupBy("type")
-        .agg(F.sort_array(F.collect_set("pred")).alias("predicates"))
-        .orderBy("type")
-    )
-    return [
-        {"type": r["type"], "predicates": list(r["predicates"])}
-        for r in agg.collect()
-    ]
+    219-227) from ``schema_summary`` rows: for each entity type, the
+    sorted set of predicates observed on subjects of that type — the
+    reference's ``type X { pred... }`` blocks.  ``dgraph.type`` itself is
+    excluded, mirroring the reference skipping the @type key in its
+    per-entity predicate loop; untyped subjects list nowhere."""
+    preds: dict[str, set[str]] = defaultdict(set)
+    for r in summary:
+        if r["pred"] != rules.DGRAPH_TYPE_PRED:
+            for t in r["types"] or ():
+                preds[t].add(r["pred"])
+    return [{"type": t, "predicates": sorted(preds[t])} for t in sorted(preds)]
 
 
 def generate_schema_text(manifest: list[dict], type_predicates: list[dict]) -> str:
@@ -279,14 +268,6 @@ def generate_schema_text(manifest: list[dict], type_predicates: list[dict]) -> s
     return "\n".join(lines)
 
 
-def write_schema_manifest(manifest: list[dict], out_dir: str) -> str:
-    os.makedirs(out_dir, exist_ok=True)
-    p = os.path.join(out_dir, "schema_manifest.json")
-    with open(p, "w") as f:
-        json.dump(manifest, f, indent=2)
-    return p
-
-
 def write_schema_artifacts(
     manifest: list[dict], type_predicates: list[dict], out_dir: str
 ) -> dict[str, str]:
@@ -294,13 +275,14 @@ def write_schema_artifacts(
     the manifest JSON, the per-type predicate lists, and the Dgraph-style
     schema text (generate_schema, load_dgraph.py:209-265)."""
     os.makedirs(out_dir, exist_ok=True)
-    paths = {"manifest": write_schema_manifest(manifest, out_dir)}
-    tp = os.path.join(out_dir, "type_predicates.json")
-    with open(tp, "w") as f:
-        json.dump(type_predicates, f, indent=2)
-    paths["type_predicates"] = tp
-    sp = os.path.join(out_dir, "schema.dgraph")
-    with open(sp, "w") as f:
-        f.write(generate_schema_text(manifest, type_predicates) + "\n")
-    paths["schema"] = sp
+    files = {
+        "manifest": ("schema_manifest.json", json.dumps(manifest, indent=2)),
+        "type_predicates": ("type_predicates.json", json.dumps(type_predicates, indent=2)),
+        "schema": ("schema.dgraph", generate_schema_text(manifest, type_predicates) + "\n"),
+    }
+    paths = {}
+    for key, (name, text) in files.items():
+        paths[key] = os.path.join(out_dir, name)
+        with open(paths[key], "w") as f:
+            f.write(text)
     return paths

@@ -53,6 +53,7 @@ from kartograph_spark.graph import (
     infer_schema_manifest,
     infer_type_predicates,
     read_back_schema,
+    schema_summary,
     write_schema_artifacts,
 )
 from kartograph_spark.lineage import (
@@ -425,9 +426,9 @@ def run_pipeline(
         counts |= write_counted(
             store, build_edges(kept), "graph_edges", ["pred"], edges=rows()
         )
-        manifest = infer_schema_manifest(kept)
+        summary = schema_summary(kept)
         write_schema_artifacts(
-            manifest, infer_type_predicates(kept), out_dir
+            infer_schema_manifest(summary), infer_type_predicates(summary), out_dir
         )
         return {"counts": counts, "ebt": dict(Counter(nodes["types"]))}
 

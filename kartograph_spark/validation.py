@@ -1,4 +1,4 @@
-"""Graph validation — anti/semi-join checks (operators J1/J2, V-rules).
+"""Graph validation — broken refs, orphans, record rules (operators J1/J2, V-rules).
 
 Reference semantics:
 - broken references = referenced URNs with no entity record
@@ -7,7 +7,8 @@ Reference semantics:
   per the two-pass rule (docs/PROCESS.md:1591-1663) broken edges are
   EXCLUDED from the final graph and reported.
 - orphans = entities with no edges into/out of the graph
-  (entity_validator.py:290-332) -> anti join both directions, warning only.
+  (entity_validator.py:290-332) -> one aggregate over the ends of the type
+  triples and the refs (typed and never linked), warning only.
 - record-level rules: URN format, PascalCase type
   (models.py:41-69, entity_validator.py:154-257) -> rlike filters into a
   validation_errors side table (severity model models.py:171-189).
@@ -66,18 +67,32 @@ def split_broken_refs(triples: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 
 def find_orphans(triples: DataFrame) -> DataFrame:
-    """Nodes with no inbound and no outbound ref edge (J2), severity=warning."""
-    nodes = node_urns(triples)
-    refs = triples.filter(F.col("obj_is_ref"))
-    out_side = refs.select(F.col("subj").alias("urn")).distinct()
-    in_side = refs.select(F.col("obj").alias("urn")).distinct()
-    connected = out_side.union(in_side).distinct()
-    return nodes.join(connected, "urn", "left_anti").select(
-        F.col("urn").alias("entity_id"),
-        F.lit("graph").alias("field"),
-        F.lit(None).cast("string").alias("target_urn"),
-        F.lit("orphan entity: no relationships to/from the graph").alias("message"),
-        F.lit("warning").alias("severity"),
+    """Nodes with no inbound and no outbound ref edge (J2), severity=warning.
+
+    One ``groupBy(urn)`` over triple ends: a type triple marks its subject
+    typed, a ref marks both its ends linked.  An orphan is typed and never
+    linked; an untyped ref end is no node, so it is never an orphan."""
+    is_type, is_ref = F.col("pred") == rules.DGRAPH_TYPE_PRED, F.col("obj_is_ref")
+    subj_end = F.struct(
+        F.col("subj").alias("urn"), is_type.alias("typed"), is_ref.alias("linked")
+    )
+    obj_end = F.struct(
+        F.col("obj").alias("urn"), F.lit(False).alias("typed"), F.lit(True).alias("linked")
+    )
+    ends = F.when(is_ref, F.array(subj_end, obj_end)).otherwise(F.array(subj_end))
+    return (
+        triples.filter(is_type | is_ref)
+        .select(F.inline(ends))
+        .groupBy("urn")
+        .agg(F.max("typed").alias("typed"), F.max("linked").alias("linked"))
+        .filter(F.col("typed") & ~F.col("linked"))
+        .select(
+            F.col("urn").alias("entity_id"),
+            F.lit("graph").alias("field"),
+            F.lit(None).cast("string").alias("target_urn"),
+            F.lit("orphan entity: no relationships to/from the graph").alias("message"),
+            F.lit("warning").alias("severity"),
+        )
     )
 
 

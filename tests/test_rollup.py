@@ -81,7 +81,7 @@ def _stored_store(spark, out):
 
 #: jobs of a fresh build of the e2e fixture: a driver round trip that
 #: comes back (a collect, an extra broadcast scan) shows up here
-FRESH_BUILD_JOBS = 56
+FRESH_BUILD_JOBS = 44
 
 
 def test_job_budget(spark, transcripts_df, alias_df, built, schemaless_reads):

@@ -189,6 +189,79 @@ def test_build_nodes_description_last_non_none(spark):
         assert got["urn:Service:b"] is None
 
 
+def test_build_nodes_edge_cases(spark):
+    """Only a type triple makes a node: a name and a description alone do
+    not, and neither does appearing as a ref object.  A description-only
+    node has a NULL name; a self-loop changes nothing."""
+    from kartograph_spark.graph import build_nodes
+
+    rows = [
+        ("urn:A:untyped", "name", "U", False, "string", "c1", 0),
+        ("urn:A:untyped", "description", "d", False, "string", "c1", 0),
+        ("urn:A:untyped", "rel", "urn:B:objonly", True, "uid", "c1", 0),
+        ("urn:C:desc", "dgraph.type", "C", False, "string", "c1", 3),
+        ("urn:C:desc", "description", "only desc", False, "string", "c1", 3),
+        ("urn:D:loop", "dgraph.type", "D", False, "string", "c2", 1),
+        ("urn:D:loop", "rel", "urn:D:loop", True, "uid", "c2", 1),
+    ]
+    schema = (
+        "subj string, pred string, obj string, obj_is_ref boolean, dtype string,"
+        " conv_id string, turn_idx long"
+    )
+    nodes = build_nodes(spark.createDataFrame(rows, schema))
+    assert nodes.columns == [
+        "urn", "type", "name", "description", "first_conv_id", "first_turn_idx"
+    ]
+    got = {r["urn"]: r.asDict() for r in nodes.collect()}
+    assert set(got) == {"urn:C:desc", "urn:D:loop"}
+    assert got["urn:C:desc"]["name"] is None
+    assert got["urn:C:desc"]["description"] == "only desc"
+    assert (got["urn:D:loop"]["type"], got["urn:D:loop"]["first_conv_id"]) == ("D", "c2")
+    assert build_nodes(spark.createDataFrame([], schema)).collect() == []
+
+
+def _joined_nodes(triples, strategy):
+    """build_nodes as three per-predicate aggregates joined onto the types."""
+    pick = F.min if strategy == "first" else F.max
+
+    def per_subject(pred, name, agg):
+        return (
+            triples.filter(F.col("pred") == pred)
+            .select(
+                F.col("subj").alias("urn"),
+                F.col("obj").alias(name),
+                "conv_id",
+                "turn_idx",
+            )
+            .groupBy("urn")
+            .agg(agg(F.struct("conv_id", "turn_idx", name)).alias(name[0]))
+        )
+
+    return (
+        per_subject(rules.DGRAPH_TYPE_PRED, "type", pick)
+        .join(per_subject("name", "name", pick), "urn", "left")
+        .join(per_subject("description", "description", F.max), "urn", "left")
+        .select(
+            "urn",
+            F.col("t.type").alias("type"),
+            F.col("n.name").alias("name"),
+            F.col("d.description").alias("description"),
+            F.col("t.conv_id").alias("first_conv_id"),
+            F.col("t.turn_idx").alias("first_turn_idx"),
+        )
+    )
+
+
+def test_build_nodes_matches_join_form(random_triples):
+    from kartograph_spark.graph import build_nodes
+
+    for strategy in ("first", "last"):
+        got = build_nodes(random_triples, strategy=strategy)
+        want = _joined_nodes(random_triples, strategy)
+        assert got.schema == want.schema
+        assert sorted(got.collect()) == sorted(want.collect())
+
+
 def _schema_fixture(spark):
     """Triple set exercising every index-selection branch of the
     reference's generate_schema (load_dgraph.py:209-265)."""
@@ -218,9 +291,10 @@ def test_schema_manifest_index_selection(spark):
     (exact, term, fulltext, trigram) — trigram required for regexp() —
     other INDEXED_PREDICATES strings (exact, term, trigram), uid preds
     @reverse with no @index, unlisted scalars unindexed."""
-    from kartograph_spark.graph import infer_schema_manifest
+    from kartograph_spark.graph import infer_schema_manifest, schema_summary
 
-    by_pred = {m["predicate"]: m for m in infer_schema_manifest(_schema_fixture(spark))}
+    summary = schema_summary(_schema_fixture(spark))
+    by_pred = {m["predicate"]: m for m in infer_schema_manifest(summary)}
     assert by_pred["name"]["index"] == ["exact", "term", "fulltext", "trigram"]
     assert by_pred["url"]["index"] == ["exact", "term", "trigram"]
     assert by_pred["mentions"]["resolved_type"] == "uid"
@@ -235,9 +309,10 @@ def test_type_predicates_sparse(spark):
     """Per-type predicate lists (load_dgraph.py:114-118, 219-227): each
     type lists only predicates observed on its entities; dgraph.type
     itself is excluded (the reference skips the @type key)."""
-    from kartograph_spark.graph import infer_type_predicates
+    from kartograph_spark.graph import infer_type_predicates, schema_summary
 
-    tp = {t["type"]: t["predicates"] for t in infer_type_predicates(_schema_fixture(spark))}
+    summary = schema_summary(_schema_fixture(spark))
+    tp = {t["type"]: t["predicates"] for t in infer_type_predicates(summary)}
     assert tp["Service"] == ["mentions", "name", "notes", "url"]
     assert tp["Tool"] == ["name", "notes"]
     assert tp["Conversation"] == ["has_tool_calls", "turn_count"]
@@ -252,11 +327,12 @@ def test_generate_schema_text_reference_format(spark):
         generate_schema_text,
         infer_schema_manifest,
         infer_type_predicates,
+        schema_summary,
     )
 
-    df = _schema_fixture(spark)
+    summary = schema_summary(_schema_fixture(spark))
     text = generate_schema_text(
-        infer_schema_manifest(df), infer_type_predicates(df)
+        infer_schema_manifest(summary), infer_type_predicates(summary)
     )
     lines = text.splitlines()
     assert "type Service {" in lines
@@ -271,3 +347,75 @@ def test_generate_schema_text_reference_format(spark):
     assert "turn_count: int ." in lines
     # type blocks come before the predicate section
     assert lines.index("type: string @index(exact, term) .") > i
+
+
+def _spark_schema_manifest(triples):
+    """The manifest as one Spark aggregate over the triples."""
+    from kartograph_spark.graph import _index_tokens
+
+    agg = (
+        triples.groupBy("pred")
+        .agg(
+            F.sort_array(F.collect_set("dtype")).alias("observed"),
+            F.count(F.lit(1)).alias("n"),
+        )
+        .orderBy("pred")
+    )
+    out = []
+    for r in agg.collect():
+        observed = list(r["observed"])
+        if "uid" in observed:
+            resolved = "uid"
+        elif len(observed) == 1:
+            resolved = observed[0]
+        else:
+            resolved = "string"
+        out.append(
+            {
+                "predicate": r["pred"],
+                "observed_types": observed,
+                "resolved_type": resolved,
+                "count": r["n"],
+                "reverse": resolved == "uid",
+                "index": _index_tokens(r["pred"], resolved),
+            }
+        )
+    return out
+
+
+def _spark_type_predicates(triples):
+    """The per-type predicate lists as a join onto the distinct
+    (subject, type) pairs."""
+    types = (
+        triples.filter(F.col("pred") == rules.DGRAPH_TYPE_PRED)
+        .select("subj", F.col("obj").alias("type"))
+        .distinct()
+    )
+    agg = (
+        triples.filter(F.col("pred") != rules.DGRAPH_TYPE_PRED)
+        .join(types, "subj")
+        .groupBy("type")
+        .agg(F.sort_array(F.collect_set("pred")).alias("predicates"))
+        .orderBy("type")
+    )
+    return [
+        {"type": r["type"], "predicates": list(r["predicates"])}
+        for r in agg.collect()
+    ]
+
+
+def test_schema_summary_matches_spark_definitions(random_triples):
+    """Both artifacts from the one summary equal their per-artifact Spark
+    aggregates, multi-type subjects included."""
+    from kartograph_spark.graph import (
+        infer_schema_manifest,
+        infer_type_predicates,
+        schema_summary,
+    )
+
+    summary = schema_summary(random_triples)
+    assert sum(r["count"] for r in summary) == random_triples.count()
+    assert any(r["types"] and len(r["types"]) > 1 for r in summary)
+    assert any(r["types"] is None for r in summary)
+    assert infer_schema_manifest(summary) == _spark_schema_manifest(random_triples)
+    assert infer_type_predicates(summary) == _spark_type_predicates(random_triples)

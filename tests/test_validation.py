@@ -1,5 +1,8 @@
-"""Validation anti-joins: broken refs (J1), orphans (J2), record rules."""
+"""Validation: broken refs (J1), orphans (J2), record rules."""
 
+from pyspark.sql import functions as F
+
+from kartograph_spark import rules
 from kartograph_spark import validation as val
 
 
@@ -42,6 +45,64 @@ def test_orphan_detection(spark):
     )
     orphans = {r["entity_id"] for r in val.find_orphans(df).collect()}
     assert orphans == {"urn:C:c"}
+
+
+def test_orphan_edge_cases(spark):
+    """Only typed subjects can be orphans; a ref end on either side, a
+    self-loop included, connects."""
+    df = _triples(
+        spark,
+        [
+            # name and description but no type: not a node, not an orphan
+            ("urn:A:untyped", "name", "U", False, "string", "c", 0),
+            ("urn:A:untyped", "description", "d", False, "string", "c", 0),
+            # an untyped ref subject is no node either
+            ("urn:A:refonly", "rel", "urn:B:target", True, "uid", "c", 0),
+            # typed node that appears only as a ref object: connected
+            ("urn:B:target", "dgraph.type", "B", False, "string", "c", 0),
+            # self-loop: connected
+            ("urn:C:loop", "dgraph.type", "C", False, "string", "c", 0),
+            ("urn:C:loop", "rel", "urn:C:loop", True, "uid", "c", 0),
+            # typed node with only scalars: the one orphan
+            ("urn:D:alone", "dgraph.type", "D", False, "string", "c", 0),
+            ("urn:D:alone", "name", "Alone", False, "string", "c", 0),
+        ],
+    )
+    got = val.find_orphans(df).collect()
+    assert [r["entity_id"] for r in got] == ["urn:D:alone"]
+    assert got[0]["field"] == "graph" and got[0]["severity"] == "warning"
+    assert got[0]["target_urn"] is None
+    assert val.find_orphans(_triples(spark, [])).collect() == []
+
+
+def _anti_join_orphans(triples):
+    """find_orphans as the anti join of the node set against the ref ends."""
+    nodes = (
+        triples.filter(F.col("pred") == rules.DGRAPH_TYPE_PRED)
+        .select(F.col("subj").alias("urn"))
+        .distinct()
+    )
+    refs = triples.filter(F.col("obj_is_ref"))
+    connected = (
+        refs.select(F.col("subj").alias("urn"))
+        .union(refs.select(F.col("obj").alias("urn")))
+        .distinct()
+    )
+    return nodes.join(connected, "urn", "left_anti").select(
+        F.col("urn").alias("entity_id"),
+        F.lit("graph").alias("field"),
+        F.lit(None).cast("string").alias("target_urn"),
+        F.lit("orphan entity: no relationships to/from the graph").alias("message"),
+        F.lit("warning").alias("severity"),
+    )
+
+
+def test_find_orphans_matches_anti_join(random_triples):
+    got = val.find_orphans(random_triples)
+    want = _anti_join_orphans(random_triples)
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())
+    assert got.count() > 0
 
 
 def test_record_errors(spark):
