@@ -89,9 +89,11 @@ def coreference_pairs(
     both pair kinds explode out of the same row — a single consumer, so
     the corpus-sized map + shuffle genuinely runs once (a union of two
     branches would let column pruning specialize each branch's partial
-    aggregate and defeat exchange reuse).  A final vocabulary-sized
-    dropDuplicates absorbs the row multiplication a dictionary
-    blocking-key collision introduces.  The separate link_pairs /
+    aggregate and defeat exchange reuse).  A pair may repeat (a dictionary
+    blocking-key collision multiplies rows): both consumers of the pair
+    set ignore repeats — the driver union-find and the ``distinct`` of the
+    distributed connected components — so no dedup shuffle runs here.
+    The separate link_pairs /
     same_name_pairs entry points each scan the corpus and remain for
     standalone use."""
     grouped = (
@@ -140,10 +142,8 @@ def coreference_pairs(
     pairs = dictj.select(F.explode(F.concat(star, hits)).alias("p")).select(
         "p.src", "p.dst", F.col("p.confidence").alias("confidence")
     )
-    return (
-        pairs.filter(F.col("confidence") >= confidence_threshold)
-        .dropDuplicates(["src", "dst"])
-        .select("src", "dst")
+    return pairs.filter(F.col("confidence") >= confidence_threshold).select(
+        "src", "dst"
     )
 
 
@@ -178,17 +178,15 @@ def canonicalize_mentions(
         .drop("member_urn", "canonical_urn")
     )
     if "subj_urn" in rewritten.columns:
-        # anchors are E1 urns; route them through the same canonical map
-        scmap = cmap.select(
-            F.col("member_urn").alias("subj_urn"),
-            F.col("canonical_urn").alias("_subj_canon"),
-        )
-        rewritten = (
-            rewritten.join(F.broadcast(scmap), "subj_urn", "left")
-            .withColumn(
-                "subj_urn", F.coalesce(F.col("_subj_canon"), F.col("subj_urn"))
-            )
-            .drop("_subj_canon")
+        # anchors are E1 urns; route them through the same canonical map,
+        # joined as an aliased self-join so both joins share one broadcast
+        # (a renamed projection of cmap would build a second one)
+        s = F.broadcast(cmap.alias("s"))
+        subj = F.coalesce(F.col("s.canonical_urn"), F.col("subj_urn"))
+        rewritten = rewritten.join(
+            s, F.col("subj_urn") == F.col("s.member_urn"), "left"
+        ).select(
+            *(subj.alias(c) if c == "subj_urn" else c for c in rewritten.columns)
         )
 
     # Dictionary metadata wins for canonical entities: overwrite

@@ -128,25 +128,25 @@ def _uf_find(parent: dict[str, str], x: str) -> str:
 
 
 def _collect_if_small(pairs: DataFrame, cap: int):
-    """Size-probe: count the pair set, collect it when it fits the driver
-    (list of (u, v) tuples; None otherwise).  persist makes the
-    count+collect pair one upstream computation; NOT limit().collect() —
-    Spark's incremental limit escalation would re-run the upstream stages
-    several times.  The collect goes through Arrow (toPandas): row-object
-    materialization is the driver-side serial term the 4N-executor side
-    pays in full (Amdahl), and the Arrow path is ~5x cheaper per row."""
-    edges = (
+    """Size-probe: collect the pair set when it fits the driver (list of
+    (u, v) tuples; None otherwise).  One bounded action: ``limit(cap + 1)``
+    collected once, and more than ``cap`` rows back means the set is over
+    the cap.  Under AQE the upstream shuffle stages materialize once before
+    the limit runs, so the limit does not re-run them; and the collect goes
+    through Arrow (toPandas), one job for the final stage instead of the
+    incremental partition escalation of ``limit().collect()``.  Arrow also
+    keeps the driver-side row materialization (the serial term the
+    executors cannot share, Amdahl) ~5x cheaper per row.  The cap counts
+    pair rows, so a pair that repeats counts once per copy."""
+    pdf = (
         pairs.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .filter(F.col("u") != F.col("v"))
-        .persist()
+        .limit(cap + 1)
+        .toPandas()
     )
-    try:
-        if edges.count() > cap:
-            return None
-        pdf = edges.toPandas()
-        return list(zip(pdf["u"], pdf["v"]))
-    finally:
-        edges.unpersist()
+    if len(pdf) > cap:
+        return None
+    return list(zip(pdf["u"], pdf["v"]))
 
 
 def connected_components(

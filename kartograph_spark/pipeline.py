@@ -4,10 +4,14 @@ Stages:
   1. mentions   — scan transcripts -> JVM-native regex extraction
                   (map-only, resumable per conversation hash-bucket)
   2. canonical  — entity linking pairs + type normalization + connected
-                  components -> broadcast rewrite
+                  components -> broadcast rewrite; the canonical write
+                  also observes the uid-predicate set
   3. triples    — edge/node/conversation triple emission -> first-
-                  occurrence dedup agg -> mixed-type resolution -> encode
-  4. validate   — broken-ref exclusion (anti join), orphans, record rules
+                  occurrence dedup agg -> mixed-type resolution (with the
+                  stored uid-predicate set) -> encode -> broken-ref
+                  exclusion (join against the node set), the broken
+                  count observed on the triples write
+  4. validate   — orphans, record rules, the broken-ref report
   5. materialize— graph_nodes / graph_edges / triples tables + schema
                   manifest + metrics
 
@@ -20,6 +24,9 @@ Bookkeeping launches no job: the run counts are ``Observation``s on the
 write jobs that already run (``write_counted``) and land in the stage's
 manifest, so a skipped stage reports its stored counts; every table is
 read back with the schema its manifest stores, so no read infers one.
+The same holds for what a stage needs of an earlier one: the triples
+stage takes its uid-predicate set from the canonical manifest and its
+broken-ref count from its own triples write, so neither costs a job.
 
 Shuffle budget (design-for-100TB): the extraction stage is shuffle-free;
 canonicalization shuffles only entity-vocabulary-sized frames; the one
@@ -32,6 +39,7 @@ from __future__ import annotations
 
 import time
 from collections import Counter
+from collections.abc import Callable
 
 import pandas as pd
 
@@ -107,18 +115,30 @@ ROLLUP_COUNTS = (
 OBSERVATION_WAIT_S = 60.0
 
 
-def observed(obs: Observation) -> dict:
+def observed(obs: Observation, if_pruned: dict | None = None) -> dict:
     """``obs``'s metrics, taken right after the action that ran its plan.
 
     ``Observation.get`` blocks until the metrics arrive, so a plan whose
     action never ran the observed node would hang the run; wait a bounded
-    time for them instead and fail loudly."""
-    done = obs._jo.future().isCompleted  # noqa: SLF001
+    time for them instead and fail loudly.
+
+    When AQE proves the input of an observed node empty it replaces the
+    subtree, node included, by an empty relation (an empty corpus does
+    this to the conversation aggregate under the dedup cache).  The action
+    then reports the metrics as a row with no fields, which
+    ``Observation.get`` cannot convert; ``if_pruned`` gives the metrics of
+    that case, the observed aggregates over no rows.  Without it the case
+    fails loudly too."""
+    jo = obs._jo  # noqa: SLF001
     deadline = time.monotonic() + OBSERVATION_WAIT_S
-    while not done():
+    while not jo.future().isCompleted():
         if time.monotonic() > deadline:
             raise RuntimeError("observed metrics did not arrive after their action")
         time.sleep(0.005)
+    if jo.getRow().length() == 0:
+        if if_pruned is None:
+            raise RuntimeError("observed plan was pruned as empty")
+        return dict(if_pruned)
     return obs.get
 
 
@@ -238,7 +258,9 @@ def build_triples(
 ) -> tuple[DataFrame, DataFrame]:
     """Pure transformation composition (no store): returns (kept_triples,
     broken_ref_report).  Used by in-memory callers (__spark_entry__,
-    bench); run_pipeline shares its triples_chain.
+    bench); run_pipeline shares its triples_chain.  The uid-predicate set
+    the chain takes is one aggregate over the canonical mentions (the
+    pipeline observes the same aggregate on its canonical write).
 
     The caller owns the caches this call persists (the extracted
     mentions, unless ``mentions`` is given, and the deduped triples both
@@ -258,42 +280,50 @@ def build_triples(
     canonical, _cmap = canonicalize_mentions(
         mentions, alias_dict, cfg.confidence_threshold
     )
-    kept, broken, _corpus, _deduped = triples_chain(canonical, transcripts)
+    uid_preds = canonical.agg(tr.uid_predicates_agg(canonical)).first()[0]
+    kept, broken, _deduped, _counts = triples_chain(
+        canonical, transcripts, uid_preds
+    )
     return kept, broken
 
 
 def triples_chain(
-    canonical: DataFrame, transcripts: DataFrame
-) -> tuple[DataFrame, DataFrame, dict, DataFrame]:
-    """Canonical mentions -> (kept_triples, broken_ref_report, corpus,
-    deduped): emission, first-occurrence dedup, uid>scalar resolution,
-    encode, broken-ref split.  ``corpus`` holds the whole-corpus ``turns``
-    and ``conversations`` counts, observed on the conversation aggregate.
-    ``deduped`` is the persisted cache both results read; the caller
+    canonical: DataFrame, transcripts: DataFrame, uid_preds: list[str]
+) -> tuple[DataFrame, DataFrame, DataFrame, Callable[[], dict]]:
+    """Canonical mentions and their uid predicates (``uid_predicates_agg``)
+    -> (kept_triples, broken_ref_report, deduped, counts): emission,
+    first-occurrence dedup, uid>scalar resolution, encode, broken-ref
+    split.  Lazy: no job runs here.  ``counts()``, called after the first
+    action on ``kept``, returns what that action observed: the
+    whole-corpus ``turns`` and ``conversations`` counts, on the
+    conversation aggregate, and the ``broken_refs`` count, on the
+    broken-ref join.  ``deduped`` is the persisted cache both results
+    read, built by that first action's own cache stage; the caller
     unpersists it after its last action on them.  The one copy of the
     chain, shared by build_triples and the run_pipeline triples stage."""
     # unnamed: a fresh name per call, so the persisted plan below never
     # matches an earlier call's cache, whose node would not report here
-    corpus = Observation()
+    corpus, broken_count = Observation(), Observation()
     raw = tr.mention_triples(canonical).unionByName(
         tr.conversation_triples(transcripts, corpus)
     )
-    # persist the deduped triples, not the encoded ones: the uid-predicate
-    # collect (resolve, a global second pass) and the validation fan-out
-    # (scalars / kept refs / node set) would otherwise each replay the
+    # persist the deduped triples, not the encoded ones: the broken-ref
+    # join reads them twice (the triples and their node set), and a
+    # caller's later actions on either result (the broken set, the
+    # in-memory callers' queries) would otherwise each replay the
     # extraction->rewrite->explode map work and the dedup shuffle; the
-    # downstream encode/filters are cheap column maps over the cache.
-    # The uid-predicate collect IS the eager materialization action: it
-    # computes every partition into the cache (AQE would otherwise race
-    # the downstream branches into independent recomputes — observed 6x)
-    # while returning the resolve input, one job instead of two — and it
-    # runs the conversation aggregate, so the corpus counts arrive with it.
+    # encode/filters are cheap column maps over the cache
     deduped = tr.dedup_first_occurrence(raw).persist()
-    uid_preds = tr.collect_uid_predicates(deduped)
-    corpus_counts = observed(corpus)
-    resolved = tr.apply_uid_resolution(deduped, uid_preds)
-    kept, broken = val.split_broken_refs(tr.encode_final(resolved))
-    return kept, broken, corpus_counts, deduped
+    resolved = tr.apply_uid_resolution(deduped, sorted(uid_preds))
+    kept, broken = val.split_broken_refs(tr.encode_final(resolved), broken_count)
+
+    def counts() -> dict:
+        # an empty corpus prunes the conversation aggregate (observed)
+        return observed(corpus, {"turns": 0, "conversations": 0}) | observed(
+            broken_count, {"broken_refs": 0}
+        )
+
+    return kept, broken, deduped, counts
 
 
 def run_stage(
@@ -311,7 +341,7 @@ def run_stage(
     stage's table schemas afterwards.  Returns the stage's manifest and
     whether it ran."""
     manifest = read_stage_marker(store.root, stage)
-    if is_current(manifest, cfg.config_hash):
+    if is_current(manifest, cfg.config_hash, stage):
         store.schemas.update(manifest["schemas"])
         return manifest, False
     write_stage_marker(store.root, stage, None)
@@ -361,11 +391,18 @@ def run_pipeline(
         canonical, cmap = canonicalize_mentions(
             mentions, alias_dict, cfg.confidence_threshold
         )
-        store.write(canonical, "canonical_mentions")
+        # the triples stage's uid-predicate set rides the canonical write
+        uid = write_counted(
+            store,
+            canonical,
+            "canonical_mentions",
+            uid_preds=tr.uid_predicates_agg(canonical),
+        )
         return {
             "counts": write_counted(
                 store, cmap, "canonical_map", merged_entities=rows()
-            )
+            ),
+            "uid_preds": sorted(uid["uid_preds"]),
         }
 
     canon, ran = run_stage(store, "canonical", cfg, canonical_stage)
@@ -374,12 +411,14 @@ def run_pipeline(
     canonical = store.read("canonical_mentions")
 
     def triples_stage():
-        kept, broken, corpus, deduped = triples_chain(canonical, transcripts)
-        counts = {
-            **corpus,
-            **write_counted(store, kept, "triples", ["pred"], triples=rows()),
-            **write_counted(store, broken, "broken_refs", broken_refs=rows()),
-        }
+        kept, broken, deduped, chain_counts = triples_chain(
+            canonical, transcripts, canon["uid_preds"]
+        )
+        counts = write_counted(store, kept, "triples", ["pred"], triples=rows())
+        counts |= chain_counts()
+        # exactly the broken rows; with none, an empty relation and no
+        # re-run of the broken-ref join
+        store.write(broken.limit(counts["broken_refs"]), "broken_refs")
         deduped.unpersist()  # the materialize stage reads the written table
         return {"counts": counts}
 

@@ -18,8 +18,8 @@ Mirrors the reference's N-Quads conversion exactly
   uid predicate are dropped in a second pass (load_dgraph.py:172-206,324-346).
 
 All transforms are JVM-side column expressions (whole-stage codegen); the
-only shuffles are the final first-occurrence dedup aggregation (A1/A2,
-map-side combinable) and the tiny uid-predicate broadcast.
+only shuffle is the final first-occurrence dedup aggregation (A1/A2,
+map-side combinable); the uid-predicate set is a literal ``isin``.
 """
 
 from __future__ import annotations
@@ -78,6 +78,40 @@ def _with_prov(df: DataFrame, turn_idx, kind_rank, match_idx) -> DataFrame:
     )
 
 
+def _is_medium(mentions: DataFrame) -> Column | None:
+    """MEDIUM tier (PROCESS.md:2149-2156): the entity is extracted — node
+    triples + a plain `mentions` edge from the Conversation — but the
+    indirect relationship is NOT auto-created; it goes to the review_flags
+    side table (validation.review_flags) instead.  None when the mentions
+    carry no confidence tier."""
+    if "confidence" not in mentions.columns:
+        return None
+    return F.col("confidence") == F.lit("MEDIUM")
+
+
+def edge_predicate_col(mentions: DataFrame) -> Column:
+    """The predicate of a mention's edge (uid) triple."""
+    pred = clean_predicate_col(F.col("pred"))
+    is_med = _is_medium(mentions)
+    if is_med is None:
+        return pred
+    return F.when(is_med, F.lit("mentions")).otherwise(pred)
+
+
+def uid_predicates_agg(mentions: DataFrame) -> Column:
+    """Aggregate over canonical mentions -> the distinct uid predicates
+    (unsorted array) of the triples ``mention_triples`` emits from them.
+
+    Only mention edges are uid triples (conversation triples are all
+    scalars), an edge is emitted when its object URN is set, and neither
+    the dedup nor the broken-ref split changes the predicate set — so the
+    set depends on the canonical mentions alone and can be observed on the
+    job that writes them, before any triple exists."""
+    return F.collect_set(
+        F.when(F.col("urn").isNotNull(), edge_predicate_col(mentions))
+    )
+
+
 def mention_triples(mentions: DataFrame) -> DataFrame:
     """Canonicalized mentions -> edge + node-attribute triples (un-deduped).
 
@@ -101,21 +135,15 @@ def mention_triples(mentions: DataFrame) -> DataFrame:
     # off extracted entities, load_dgraph.py:299-309), falling back to the
     # Conversation subject for plain mentions / anchorless verb mentions.
     edge_subj = F.coalesce(F.col("subj_urn"), conv_subject_col())
-    edge_pred = clean_predicate_col(F.col("pred"))
-    if "confidence" in mentions.columns:
-        # MEDIUM tier (PROCESS.md:2149-2156): the entity is extracted —
-        # node triples + a plain `mentions` edge from the Conversation —
-        # but the indirect relationship is NOT auto-created; it goes to
-        # the review_flags side table (validation.review_flags) instead.
-        is_med = F.col("confidence") == F.lit("MEDIUM")
+    is_med = _is_medium(mentions)
+    if is_med is not None:
         edge_subj = F.when(is_med, conv_subject_col()).otherwise(edge_subj)
-        edge_pred = F.when(is_med, F.lit("mentions")).otherwise(edge_pred)
     exploded = mentions.select(
         F.explode(
             F.array(
                 trip(
                     edge_subj,
-                    edge_pred,
+                    edge_predicate_col(mentions),
                     F.col("urn"),
                     F.lit(True),
                     F.lit("uid"),
@@ -275,7 +303,9 @@ def dedup_first_occurrence(triples: DataFrame, keep: str = "first") -> DataFrame
 def collect_uid_predicates(triples: DataFrame) -> list[str]:
     """Distinct predicates observed as uid — tiny by construction.  When
     ``triples`` is freshly persisted, this collect doubles as the eager
-    cache materialization (one action instead of count + collect)."""
+    cache materialization (one action instead of count + collect).  The
+    KG pipeline needs no such action: it observes the same set on its
+    canonical write (``uid_predicates_agg``)."""
     return [
         r["pred"]
         for r in triples.filter(F.col("obj_is_ref")).select("pred").distinct().collect()

@@ -18,7 +18,7 @@ Validation never fails the run (config.py:150-157
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from kartograph_spark import rules
@@ -33,13 +33,21 @@ def node_urns(triples: DataFrame) -> DataFrame:
     )
 
 
-def split_broken_refs(triples: DataFrame) -> tuple[DataFrame, DataFrame]:
+def split_broken_refs(
+    triples: DataFrame, broken_count: Observation | None = None
+) -> tuple[DataFrame, DataFrame]:
     """(kept_triples, broken_ref_edges).
 
     Ref edges whose obj is not a defined node are dropped from the graph
     and reported (J1 + two-pass exclusion).  Node set is distinct URNs —
     far smaller than the edge set, but not guaranteed tiny, so this is a
     plain equi join and AQE may still broadcast it when small.
+
+    ``broken_count``, if given, observes ``broken_refs`` (the number of
+    broken edges) on the joined plan both outputs filter, so the job that
+    writes ``kept`` counts the broken edges too: a caller that knows the
+    count can write the broken set as ``broken.limit(n)``, which costs no
+    re-run of the join when ``n`` is 0.
     """
     nodes = node_urns(triples)
     # ONE pass over the (usually cached) triple frame: left join against
@@ -50,13 +58,13 @@ def split_broken_refs(triples: DataFrame) -> tuple[DataFrame, DataFrame]:
         "_hit", F.lit(True)
     )
     joined = triples.join(nodes_as_obj, "obj", "left")
-    cols = [c for c in triples.columns]
-    kept = joined.filter(
-        ~F.col("obj_is_ref") | F.col("_hit").isNotNull()
-    ).select(*cols)
-    broken = joined.filter(
-        F.col("obj_is_ref") & F.col("_hit").isNull()
-    ).select(
+    is_broken = F.col("obj_is_ref") & F.col("_hit").isNull()
+    if broken_count is not None:
+        joined = joined.observe(
+            broken_count, F.count_if(is_broken).alias("broken_refs")
+        )
+    kept = joined.filter(~is_broken).select(*triples.columns)
+    broken = joined.filter(is_broken).select(
         F.col("subj").alias("entity_id"),
         F.col("pred").alias("field"),
         F.col("obj").alias("target_urn"),

@@ -55,6 +55,43 @@ def test_distributed_path_matches_driver_path(spark):
     assert {tuple(r) for r in dist.collect()} == {tuple(r) for r in drv.collect()}
 
 
+def test_driver_cut_at_the_cap(spark, monkeypatch):
+    """``max_driver_edges`` pairs stay on the driver path, one more goes
+    distributed (self-loops do not count), both paths give the same
+    canonical map, and the size probe leaves no persisted RDD behind."""
+    from kartograph_spark import components
+
+    rows = [(f"urn:T:n{i}", f"urn:T:n{i + 1}") for i in range(5)]
+    rows += [("urn:T:m1", "urn:T:m0"), ("urn:T:x", "urn:T:x")]
+    pairs = _pairs(spark, rows)
+    cap = len(rows) - 1  # the pair rows that are not self-loops
+
+    def persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    before = persisted()
+    assert sorted(components._collect_if_small(pairs, cap)) == sorted(rows[:-1])
+    assert components._collect_if_small(pairs, cap - 1) is None
+    assert persisted() == before
+
+    distributed = []
+    cc = components.connected_components
+    monkeypatch.setattr(
+        components,
+        "connected_components",
+        lambda *a, **kw: distributed.append(1) or cc(*a, **kw),
+    )
+    drv = canonical_map(pairs, max_driver_edges=cap)
+    assert not distributed
+    dist = canonical_map(pairs, max_driver_edges=cap - 1)
+    assert distributed
+    got = {tuple(r) for r in drv.collect()}
+    assert got == {tuple(r) for r in dist.collect()}
+    assert got == {(f"urn:T:n{i}", "urn:T:n0") for i in range(1, 6)} | {
+        ("urn:T:m1", "urn:T:m0")
+    }
+
+
 def test_triangle_counts_k4_plus_star(spark):
     from kartograph_spark.components import triangle_counts
 

@@ -198,6 +198,30 @@ def test_full_pipeline_resume_mid_triples(spark, transcripts_df, alias_df):
     assert m2["review_flags"] == m1["review_flags"]
 
 
+def test_canonical_manifest_without_uid_preds_rebuilds(
+    spark, transcripts_df, alias_df
+):
+    """A canonical manifest of the layout before ``uid_preds`` vouches for
+    nothing: resuming with the triples stage lost re-runs the canonical
+    stage once (no KeyError), and the triples equal the fresh build's."""
+    cfg = PipelineConfig(n_buckets=8)
+    out = tempfile.mkdtemp(prefix="kg-uid-preds-")
+    run_pipeline(spark, transcripts_df, alias_df, out, cfg)
+    baseline = _triples_pdf(spark, out)
+    manifest = read_stage_marker(out, "canonical")
+    uid_preds = manifest.pop("uid_preds")
+    assert uid_preds
+    write_stage_marker(out, "canonical", manifest)
+    write_stage_marker(out, "triples", None)
+
+    m2 = run_pipeline(spark, transcripts_df, alias_df, out, cfg)
+    assert m2["skipped_stages"] == ["mentions", "materialize"]
+    assert read_stage_marker(out, "canonical")["uid_preds"] == uid_preds
+    pd.testing.assert_frame_equal(baseline, _triples_pdf(spark, out))
+    m3 = run_pipeline(spark, transcripts_df, alias_df, out, cfg)
+    assert m3["skipped_stages"] == list(STAGES)
+
+
 def test_full_pipeline_rerun_skips_everything(spark, transcripts_df, alias_df):
     """A clean re-run against a completed out dir writes no table and no
     manifest — only the metrics rollup — and reports identical counts."""

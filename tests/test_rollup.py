@@ -18,6 +18,7 @@ from kartograph_spark.config import PipelineConfig
 from kartograph_spark.graph import TableStore
 from kartograph_spark.lineage import read_stage_marker
 from kartograph_spark.pipeline import ROLLUP_COUNTS, STAGE_TABLES, run_pipeline
+from kartograph_spark.reports import ERROR_COLS
 
 CFG = PipelineConfig(n_buckets=8)
 
@@ -27,14 +28,27 @@ def _counts(metrics):
 
 
 def _counted_run(spark, group, *args):
-    """run_pipeline under its own job group; returns (metrics, jobs)."""
+    """run_pipeline under its own job group; returns (metrics, job ids)."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
         metrics = run_pipeline(spark, *args)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return metrics, len(sc.statusTracker().getJobIdsForGroup(group))
+    return metrics, sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _job_stages(spark, job_ids):
+    """One line per job: its id and its stages' names (the call sites),
+    each with its number of stages."""
+    st = spark.sparkContext.statusTracker()
+    lines = []
+    for j in job_ids:
+        info = st.getJobInfo(j)
+        stages = [st.getStageInfo(s) for s in info.stageIds] if info else []
+        names = Counter(s.name for s in stages if s)
+        lines.append(f"job {j}: " + "; ".join(f"{n} x{k}" for n, k in names.items()))
+    return "\n".join(lines)
 
 
 @pytest.fixture
@@ -81,7 +95,7 @@ def _stored_store(spark, out):
 
 #: jobs of a fresh build of the e2e fixture: a driver round trip that
 #: comes back (a collect, an extra broadcast scan) shows up here
-FRESH_BUILD_JOBS = 44
+FRESH_BUILD_JOBS = 36
 
 
 def test_job_budget(spark, transcripts_df, alias_df, built, schemaless_reads):
@@ -93,8 +107,10 @@ def test_job_budget(spark, transcripts_df, alias_df, built, schemaless_reads):
     assert not [p for p in schemaless_reads if p.startswith(out)]
     _, fresh, fresh_jobs, noop, noop_jobs = built
     assert noop["skipped_stages"] == list(STAGE_TABLES)
-    assert noop_jobs <= 3, noop_jobs
-    assert fresh_jobs == FRESH_BUILD_JOBS, fresh_jobs
+    assert len(noop_jobs) <= 3, _job_stages(spark, noop_jobs)
+    assert len(fresh_jobs) == FRESH_BUILD_JOBS, (
+        f"{len(fresh_jobs)} jobs:\n" + _job_stages(spark, fresh_jobs)
+    )
 
 
 def test_run_pipeline_leaves_no_cache(spark, transcripts_df, alias_df):
@@ -165,6 +181,63 @@ def test_counts_match_tables(spark, transcripts_df, built):
     assert all(recount[k] > 0 for k in ("turns", "mentions", "triples", "entities"))
     ebt = Counter(r["type"] for r in read("graph_nodes").select("type").collect())
     assert read_stage_marker(out, "materialize")["ebt"] == dict(ebt)
+
+
+def test_planted_broken_ref_is_reported_and_excluded(
+    spark, transcripts_df, alias_df, built, monkeypatch
+):
+    """A canonical mention whose URN has no type triple makes one broken
+    reference: ``broken_refs`` holds exactly its edge, ``triples`` keeps
+    its name triple but not the edge, and the rollup and the
+    validation errors count it."""
+    ghost = "urn:Ghost:nobody"
+    values = {
+        "urn": ghost,
+        "conv_id": "conv-000001",
+        "turn_idx": 0,
+        "kind": "urn",
+        "kind_rank": 0,
+        "match_idx": 0,
+        "ident": "nobody",
+        "name": "Nobody",
+        "pred": "mentions",
+        "confidence": "HIGH",
+    }
+    canonicalize = pipeline.canonicalize_mentions
+
+    def with_ghost(*args):
+        canonical, cmap = canonicalize(*args)
+        row = spark.range(1).select(
+            *(
+                F.lit(values.get(f.name)).cast(f.dataType).alias(f.name)
+                for f in canonical.schema
+            )
+        )
+        return canonical.unionByName(row), cmap
+
+    monkeypatch.setattr(pipeline, "canonicalize_mentions", with_ghost)
+    out = tempfile.mkdtemp(prefix="kg-broken-")
+    m = run_pipeline(spark, transcripts_df, alias_df, out, CFG)
+    fresh = built[1]
+    read = lambda t: spark.read.parquet(os.path.join(out, t))  # noqa: E731
+    edge = (
+        "urn:Conversation:conv-000001",
+        "mentions",
+        ghost,
+        "broken reference: target entity not defined",
+        "error",
+    )
+    assert [tuple(r) for r in read("broken_refs").collect()] == [edge]
+    ghost_triples = read("triples").filter(F.col("obj") == ghost).count()
+    assert ghost_triples == 0
+    assert read("triples").filter(F.col("subj") == ghost).count() == 1
+    assert m["triples"] == fresh["triples"] + 1
+    assert m["broken_refs"] == 1
+    errors = read("validation_errors")
+    broken = errors.filter(F.col("message").startswith("broken reference"))
+    assert [tuple(r) for r in broken.select(*ERROR_COLS).collect()] == [edge]
+    assert m["validation_errors"] == fresh["validation_errors"] + 1
+    assert m["validation_errors"] == errors.count()
 
 
 def test_stored_schemas_equal_inference(spark, built):
